@@ -10,7 +10,6 @@ and the catalog is itself a DataFrame so discovery composes with joins.
 from __future__ import annotations
 
 import os
-from dataclasses import dataclass
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -29,16 +28,6 @@ TESTDATA_TABLES = (
     "documents",
     "embeddings",
 )
-
-
-@dataclass(frozen=True)
-class TableRef:
-    """One entry in the lake catalog."""
-
-    table: str
-    path: str
-    fmt: str = "parquet"  # parquet | csv
-    kind: str = "data"  # data | dirty | clean
 
 
 # testdata columns stored as TIMESTAMP(NANOS): with
@@ -99,14 +88,6 @@ def load_sf_tables(spark: SparkSession, sf_dir: str, tables=TESTDATA_TABLES) -> 
         out[t] = df
     _SF_TABLE_CACHE.setdefault(spark, {})[key] = dict(out)
     return out
-
-
-def register_sf_views(spark: SparkSession, sf_dir: str, tables=TESTDATA_TABLES) -> dict[str, DataFrame]:
-    """Register each sf table as a temp view (SQL entry point)."""
-    dfs = load_sf_tables(spark, sf_dir, tables)
-    for name, df in dfs.items():
-        df.createOrReplaceTempView(name)
-    return dfs
 
 
 # ---------------------------------------------------------------------------

@@ -11,14 +11,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def dataset_quality_score(truth: DataFrame, n_rows: int, n_cols: int) -> float:
-    """1 − errors/cells (reference dataset.py:80-84)."""
-    cells = n_rows * n_cols
-    if cells == 0:
-        return 1.0
-    return 1.0 - truth.count() / cells
-
-
 def merge_errors(violations: DataFrame) -> DataFrame:
     """Distinct predicted error cells (reference utils/metrics.py:11-19
     unions per-rule index lists; here a distinct over cell grain)."""

@@ -60,15 +60,6 @@ def _beers_df(spark: SparkSession) -> DataFrame:
     )
 
 
-def permuted_target(spark: SparkSession) -> DataFrame:
-    """beers with reversed column order and alignment-free names."""
-    df = _beers_df(spark)
-    ren = permutation_map()
-    return df.select(
-        *[F.col(f"`{c}`").alias(ren[c]) for c in reversed(df.columns)]
-    )
-
-
 def permuted_scores(spark: SparkSession) -> DataFrame:
     """J5 score frame of beers_1 × the renamed/permuted copy
     (the registered discrimination query)."""

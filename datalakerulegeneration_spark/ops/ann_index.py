@@ -16,11 +16,11 @@ On disk (all parquet, all engine-readable):
   subvectors, so a rebuild from the same corpus is bit-identical).
 * ``{path}/codes``     — (id, codes: array<int>, rn_: double
   [, cell: int]): ~m bytes + one norm per vector — the ~50× storage
-  cut that makes exhaustive scans of a 100 TB corpus possible.
-  Appends land in sibling ``{path}/codes_vN`` directories; the
-  committed set is ``{path}/codes_MANIFEST`` (a JSON list flipped
-  atomically with ``os.replace``), so readers never observe a
-  half-written append — see :func:`pq_index_append`.
+  cut that makes exhaustive scans of a 100 TB corpus possible. The
+  build and every append or compaction commit a version of it
+  through ``streaming.committed`` (the manifest is
+  ``{path}/_MANIFEST``), so readers never observe a half-written
+  append.
 * ``{path}/centroids`` — (cell, cvec), only when built with
   ``n_lists``: the IVF routing table (KMeans over reconstructions,
   fixed seed).
@@ -96,61 +96,16 @@ def _reconstruct(codes: DataFrame, anchors: DataFrame, carry: tuple[str, ...] = 
     )
 
 
-def _require_local_index_path(path: str) -> None:
-    """The manifest commit protocol relies on POSIX rename atomicity
-    (``os.replace``), so the index path must be a LOCAL filesystem
-    path in this build. A URI-scheme path (hdfs://, s3a://, ...)
-    would silently bypass the manifest (os.path checks all miss) and
-    crash on the manifest write — refuse loudly instead. Remote
-    object stores need a rename-atomic commit service (e.g. a real
-    table format's commit log); HDFS users can mount via NFS or port
-    _write_codes_manifest to the Hadoop FileSystem API."""
-    import re
+def _codes_state(spark: SparkSession, path: str):
+    # imported here: the streaming package imports this module
+    from datalakerulegeneration_spark.streaming.committed import CommittedState
 
-    if re.match(r"^[a-zA-Z][a-zA-Z0-9+.-]*://", path):
-        raise NotImplementedError(
-            f"pq index paths must be local-filesystem paths (got {path!r}): "
-            "the codes_MANIFEST commit protocol uses POSIX atomic rename"
-        )
-
-
-def _codes_dirs(path: str) -> list[str]:
-    """Committed code-directory names for the index at ``path``.
-
-    ``codes_MANIFEST`` (a JSON list, rewritten atomically via
-    ``os.replace`` — the budget_stream marker pattern) is the ONLY
-    source of truth a reader consults: an append writes its delta to a
-    fresh ``codes_vN`` directory FIRST and flips the manifest LAST, so
-    a concurrent reader sees either the old committed set or the new
-    one, never a half-written directory. Indexes built before the
-    manifest existed fall back to the legacy single ``codes`` dir."""
-    import json
-    import os
-
-    _require_local_index_path(path)
-    manifest = os.path.join(path, "codes_MANIFEST")
-    if os.path.exists(manifest):
-        with open(manifest) as fh:
-            return list(json.load(fh))
-    return ["codes"]
-
-
-def _write_codes_manifest(path: str, dirs: list[str]) -> None:
-    """Atomically publish ``dirs`` as the committed code set."""
-    import json
-    import os
-
-    _require_local_index_path(path)
-    manifest = os.path.join(path, "codes_MANIFEST")
-    tmp = manifest + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump(dirs, fh)
-    os.replace(tmp, manifest)  # atomic commit point
+    return CommittedState(spark, path)
 
 
 def _read_codes(spark: SparkSession, path: str) -> DataFrame:
     """The committed codes as ONE DataFrame (manifest snapshot)."""
-    return spark.read.parquet(*[f"{path}/{d}" for d in _codes_dirs(path)])
+    return _codes_state(spark, path).read("codes")
 
 
 def pq_build_index(
@@ -179,6 +134,7 @@ def pq_build_index(
     anchors = pq_anchors(vectors, m, ksub, id_col, vec_col)
     anchors.write.mode("overwrite").parquet(f"{path}/anchors")
     spark = vectors.sparkSession
+    tx = _codes_state(spark, path).begin()
     anchors_r = spark.read.parquet(f"{path}/anchors")
     codes = _encode(vectors, anchors_r, m, dsub, id_col, vec_col)
     # rn_ stored at build: reconstructions are deterministic, so the
@@ -192,18 +148,17 @@ def pq_build_index(
 
         ml = recon.withColumn("__mlvec", array_to_vector(F.col("rvec")))
         model = KMeans(k=n_lists, featuresCol="__mlvec", predictionCol="cell", seed=seed).fit(ml)
-        assigned = model.transform(ml).select("id", "codes", "rn_", "cell")
-        assigned.write.mode("overwrite").parquet(f"{path}/codes")
+        tx.write("codes", model.transform(ml).select("id", "codes", "rn_", "cell"), replace=True)
         centers = [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())]
         spark.createDataFrame(centers, "cell int, cvec array<double>").write.mode(
             "overwrite"
         ).parquet(f"{path}/centroids")
     else:
-        recon.select("id", "codes", "rn_").write.mode("overwrite").parquet(f"{path}/codes")
+        tx.write("codes", recon.select("id", "codes", "rn_"), replace=True)
     spark.createDataFrame(
         [(m, ksub, dim, n_lists)], "m int, ksub int, dim int, n_lists int"
     ).write.mode("overwrite").parquet(f"{path}/meta")
-    _write_codes_manifest(path, ["codes"])
+    tx.commit()
 
 
 def pq_search_index(
@@ -308,25 +263,17 @@ def pq_index_append(
     ``slice()`` would silently truncate (or shorten) wrong-width
     vectors into garbage codes, so a mismatch raises instead.
 
-    Atomicity (r9): the delta is written to a FRESH ``codes_vN``
-    directory and only then published by an atomic manifest rewrite
-    (``os.replace``), so a concurrent ``pq_search_index`` — which reads
-    exactly the manifest's committed set — can never list a
-    half-written batch: it sees the index before the append or after
-    it, nothing in between. A crash before the flip leaves an orphan
-    directory no reader ever consults; the next append picks a higher
-    version number and the replayed batch re-admits cleanly through
+    Atomicity: the delta commits through ``streaming.committed``, so a
+    concurrent ``pq_search_index`` sees the index before the append or
+    after it, nothing in between; a crashed append leaves nothing any
+    reader consults, and the replayed batch re-admits cleanly through
     the id anti-join.
 
     Single-WRITER contract (readers unlimited): two appends running
-    concurrently could pick the same version number and one would
-    overwrite the other's unpublished delta. Streaming ingestion
+    concurrently could pick the same version number. Streaming ingestion
     satisfies this by construction (foreachBatch serializes batches);
     batch jobs appending to one index must do the same.
     """
-    import os
-    import re
-
     spark = vectors.sparkSession
     meta = spark.read.parquet(f"{path}/meta").first()
     m, dsub = meta["m"], meta["dim"] // meta["m"]
@@ -339,8 +286,8 @@ def pq_index_append(
             f"refusing to encode wrong-width vectors into the index"
         )
     anchors = spark.read.parquet(f"{path}/anchors")
-    committed = _codes_dirs(path)
-    existing = spark.read.parquet(*[f"{path}/{d}" for d in committed])
+    state = _codes_state(spark, path)
+    existing = state.read("codes")
     fresh = vectors.join(
         existing.select(F.col("id").alias("_seen")).hint("shuffle_hash"),
         vectors[id_col] == F.col("_seen"),
@@ -352,15 +299,6 @@ def pq_index_append(
     fresh = fresh.localCheckpoint(eager=True)
     if fresh.isEmpty():
         return  # full replay — nothing to publish, no manifest churn
-    # next version = 1 + highest codes_v* ON DISK (not in the manifest):
-    # a crashed append leaves an orphan dir, and reusing its name would
-    # mix two half-batches
-    seen = [0]
-    for name in os.listdir(path) if os.path.isdir(path) else []:
-        mt = re.fullmatch(r"codes_v(\d+)", name)
-        if mt:
-            seen.append(int(mt.group(1)))
-    delta_dir = f"codes_v{max(seen) + 1}"
     codes = _encode(fresh, anchors, m, dsub, id_col, vec_col)
     recon = _reconstruct(codes, anchors, carry=("codes",)).withColumn(
         "rn_", F.expr(norm_expr("rvec"))
@@ -382,41 +320,25 @@ def pq_index_append(
             .agg(F.min(F.struct(F.col("cdist2"), F.col("cell"))).alias("best"))
             .select("id", "codes", "rn_", F.col("best.cell").alias("cell"))
         )
-        routed.write.mode("overwrite").parquet(f"{path}/{delta_dir}")
     else:
-        recon.select("id", "codes", "rn_").write.mode("overwrite").parquet(
-            f"{path}/{delta_dir}"
-        )
-    # publish LAST: the atomic flip is the only moment readers' view
-    # changes, and by then the delta directory is fully written
-    _write_codes_manifest(path, committed + [delta_dir])
+        routed = recon.select("id", "codes", "rn_")
+    tx = state.begin()
+    tx.write("codes", routed)
+    tx.commit()
 
 
 def pq_index_compact(spark: SparkSession, path: str) -> None:
-    """Rewrite the committed code set as ONE directory and flip the
-    manifest to it — the maintenance pass a long-running ingest stream
-    schedules when its manifest accumulates hundreds of small
-    ``codes_vN`` deltas (each append is one directory; scan cost and
-    file-listing overhead grow with the count). Same atomicity as
-    append: the compacted directory is fully written before the flip,
-    so a concurrent reader sees the old committed set or the new one —
-    both contain exactly the same rows. Old directories are left on
-    disk (a reader may still be mid-scan on the old manifest snapshot);
-    a subsequent compact or an external janitor can remove directories
-    no manifest references."""
-    import os
-    import re
-
-    committed = _codes_dirs(path)
-    if len(committed) <= 1:
+    """Rewrite the committed code set as ONE version — the maintenance
+    pass a long-running ingest stream schedules when appends have
+    accumulated hundreds of small versions (each append is one
+    directory; scan cost and file-listing overhead grow with the
+    count). Same atomicity as append: a concurrent reader sees the old
+    committed set or the new one, both with exactly the same rows. The
+    replaced versions are removed after the commit, so a reader still
+    scanning the old snapshot must retry."""
+    state = _codes_state(spark, path)
+    if len(state.versions("codes")) <= 1:
         return
-    seen = [0]
-    for name in os.listdir(path):
-        mt = re.fullmatch(r"codes_v(\d+)", name)
-        if mt:
-            seen.append(int(mt.group(1)))
-    target = f"codes_v{max(seen) + 1}"
-    spark.read.parquet(*[f"{path}/{d}" for d in committed]).write.mode(
-        "overwrite"
-    ).parquet(f"{path}/{target}")
-    _write_codes_manifest(path, [target])
+    tx = state.begin()
+    tx.write("codes", state.read("codes"), replace=True)
+    tx.commit()

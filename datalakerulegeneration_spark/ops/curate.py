@@ -27,6 +27,8 @@ rows already stripped to (id, source, fingerprint, n_tokens).
 
 from __future__ import annotations
 
+from typing import Literal
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -64,7 +66,7 @@ def curate_corpus(
     token_budget: int | None = None,
     sft_max_tokens: int | None = None,
     ccnet_lang: str | None = None,
-    ccnet_materialize: bool = True,
+    ccnet_materialize: bool | Literal["persist"] = True,
     url_col: str | None = None,
     blocked_domains=None,
     max_per_domain: int | None = None,

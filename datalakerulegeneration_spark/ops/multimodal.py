@@ -568,21 +568,6 @@ def sample_frames(assets: DataFrame, n_frames: int = 4) -> DataFrame:
     return assets.mapInPandas(run, schema=FRAME_SCHEMA)
 
 
-def resize_stub(assets: DataFrame, width: int, height: int) -> DataFrame:
-    """Resize plumbing: plan-level contract only (payload passthrough +
-    target dims recorded). A real implementation swaps the identity
-    transform for a codec call inside the same mapInPandas shape."""
-    return assets.withColumn(
-        "meta",
-        F.struct(
-            F.lit(width).alias("width"),
-            F.lit(height).alias("height"),
-            F.col("meta.duration_ms").alias("duration_ms"),
-            F.col("meta.sample_rate").alias("sample_rate"),
-        ),
-    )
-
-
 # ---------------------------------------------------------------------------
 # perceptual image hashing (dHash) + near-dup
 # ---------------------------------------------------------------------------

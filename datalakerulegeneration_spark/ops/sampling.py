@@ -611,17 +611,6 @@ def group_split(
     )
 
 
-def group_split_sql(
-    table: str, group_col: str, test_rate: float = 0.1, salt: str = "gsplit"
-) -> str:
-    """DuckDB oracle for :func:`group_split` (full-row passthrough)."""
-    return f"""
-SELECT t.*, CASE WHEN {_hash_bucket_sql(group_col, salt)} < {int(test_rate * _BUCKETS)}
-            THEN 'test' ELSE 'train' END AS split
-FROM {table} t
-"""
-
-
 def token_budget_select(
     df: DataFrame,
     id_col: str,

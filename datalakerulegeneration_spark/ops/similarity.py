@@ -951,39 +951,6 @@ def sq8_stats(vectors: DataFrame, vec_col: str = "embedding") -> DataFrame:
     )
 
 
-def quantize_embeddings(
-    vectors: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding"
-) -> DataFrame:
-    """SQ8 scalar quantization: each dimension affinely mapped to
-    0..255 by the corpus per-dim (min, max) — ``(id, qvec:
-    array<int>)``. The 4× (fp32) storage cut is what makes a 100 TB
-    ANN corpus scannable; ranking then runs in exact integer
-    arithmetic (see :func:`quantized_topk`), so the oracle is
-    bit-exact, not approximately equal.
-
-    The quantizer is ``floor(x*255 + 0.5)`` (half-up via floor —
-    identical in every engine, unlike round()'s half-even/half-away
-    divergence); constant dimensions map to 0. Two corpus scans total:
-    the stats pass and the quantize pass (the 1-row codebook rides a
-    broadcast)."""
-    st = sq8_stats(vectors, vec_col)
-    centered = F.zip_with(F.col(vec_col), F.col("mns"), lambda x, m: x.cast("double") - m)
-    ranges = F.zip_with(F.col("mxs"), F.col("mns"), lambda a, b: a - b)
-    q = F.zip_with(
-        centered,
-        ranges,
-        lambda c, r: F.when(r == 0.0, F.lit(0)).otherwise(
-            F.least(
-                F.lit(255),
-                F.greatest(F.lit(0), F.floor(c / r * 255.0 + 0.5).cast("int")),
-            )
-        ),
-    )
-    return vectors.crossJoin(F.broadcast(st)).select(
-        F.col(id_col).alias("id"), q.alias("qvec")
-    )
-
-
 def _sq8_sql(table: str, id_col: str, vec_col: str) -> str:
     """DuckDB CTE body producing (id, qvec) — the same stats + affine
     map arithmetic in the same operation order, so every int matches."""
@@ -1613,25 +1580,56 @@ def pca_embeddings(
     of :func:`project_embeddings` (JL is oblivious; PCA spends a
     covariance pass to align components with the corpus's actual
     variance directions, so at equal ``out_dim`` it preserves more
-    neighborhood structure on anisotropic embeddings). Spark ML's PCA
-    does the heavy step right: the d×d Gramian accumulates DISTRIBUTED
-    (one pass, map-side combine), only the d² eigenproblem runs on the
-    driver — d is the embedding width, never the corpus. Deterministic
-    for a given corpus (LAPACK eigenvectors; sign convention fixed by
-    the build), but not SQL-expressible → registered rows-only, with
-    pytest pinning determinism + recall.
+    neighborhood structure on anisotropic embeddings). One Spark
+    aggregate sums the (d+1)² moments of ``[1, x]`` (count, column sums,
+    Gramian) in DECIMAL, so the sums are exact and independent of merge
+    order; only the d×d covariance eigenproblem runs on the driver
+    (``numpy.linalg.eigh``) — d is the embedding width, never the
+    corpus. Components are ordered by descending variance and each is
+    signed so its largest-magnitude entry is positive, which makes the
+    projection deterministic for a given corpus. Vectors are projected
+    uncentered, as Spark ML's ``PCAModel`` does. Not SQL-expressible →
+    registered rows-only, with pytest pinning determinism + recall.
 
     Returns ``(id, pvec: array<double>)``.
     """
-    from pyspark.ml.feature import PCA as MLPCA
-    from pyspark.ml.functions import array_to_vector, vector_to_array
+    import numpy as np
 
-    v = vectors.select(
-        F.col(id_col).alias("id"),
-        array_to_vector(F.col(vec_col).cast("array<double>")).alias("_fv"),
+    x = F.concat(F.array(F.lit(1.0)), F.col(vec_col).cast("array<double>"))
+    moments = (
+        vectors.select(x.alias("x"))
+        .select(
+            F.posexplode(
+                F.expr(
+                    "transform(sequence(0, size(x) * size(x) - 1),"
+                    " k -> x[k div size(x)] * x[k % size(x)])"
+                )
+            ).alias("k", "m")
+        )
+        .groupBy("k")
+        .agg(F.sum(F.col("m").cast("decimal(38,18)")).alias("m"))
+        .collect()
     )
-    model = MLPCA(k=out_dim, inputCol="_fv", outputCol="_pc").fit(v)
-    return model.transform(v).select("id", vector_to_array(F.col("_pc")).alias("pvec"))
+    dim = round(len(moments) ** 0.5)
+    mm = np.zeros(dim * dim)
+    for r in moments:
+        mm[r["k"]] = float(r["m"])
+    mm = mm.reshape(dim, dim)
+    n, mean = mm[0, 0], mm[0, 1:] / mm[0, 0]
+    cov = (mm[1:, 1:] - n * np.outer(mean, mean)) / (n - 1)
+    comps = np.linalg.eigh(cov)[1][:, ::-1][:, :out_dim].T
+    comps *= np.sign(comps[np.arange(len(comps)), np.abs(comps).argmax(axis=1)])[:, None]
+    basis = F.array(*[F.array(*[F.lit(float(c)) for c in row]) for row in comps])
+    v = F.col(vec_col).cast("array<double>")
+    return vectors.select(
+        F.col(id_col).alias("id"),
+        F.transform(
+            basis,
+            lambda c: F.aggregate(
+                F.zip_with(v, c, lambda a, b: a * b), F.lit(0.0), lambda acc, p: acc + p
+            ),
+        ).alias("pvec"),
+    )
 
 
 def pca_topk(

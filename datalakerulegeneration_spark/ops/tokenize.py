@@ -75,25 +75,6 @@ def token_count_col(text_col: str, tokenizer_fn: TokenizerFn | None = None) -> C
     return F.when(txt.isNull(), F.lit(None).cast("bigint")).otherwise(_count(txt))
 
 
-def token_count_sql_expr(text_col: str) -> str:
-    """DuckDB twin of the DEFAULT ``token_count_col`` (the proxy path;
-    a plugged tokenizer has no SQL twin by design — it is the
-    sanctioned rows-only seam)."""
-    return f"len(regexp_extract_all({text_col}, '[a-zA-Z0-9]+|[^a-zA-Z0-9\\s]'))"
-
-
-def with_token_count(
-    df: DataFrame,
-    text_col: str,
-    out_col: str = "n_bpe_tokens",
-    tokenizer_fn: TokenizerFn | None = None,
-) -> DataFrame:
-    """Append a token-count column — the composition helper budgeted
-    operators build on (count once, then pack/select/report off the
-    column)."""
-    return df.withColumn(out_col, token_count_col(text_col, tokenizer_fn))
-
-
 def default_tokenizer(encoding: str = "cl100k_base") -> TokenizerFn | None:
     """Best importable REAL tokenizer as a batch counting fn, or
     ``None`` when only the proxy is available.

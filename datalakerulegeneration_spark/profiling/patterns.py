@@ -3,10 +3,9 @@
 Reference semantics:
 * symbolic pattern (profiling/profiler.py:134-151): digit→'0',
   alpha→'A', whitespace→'_', everything else kept;
-* regex pattern (profiling/profiler.py:153-165): digit→'\\d',
-  alpha→'[A-Za-z]', whitespace→'\\s', punctuation escaped;
 * type inference (profiling/profiler.py:74-127): per-type match ratio
-  with a 0.7 threshold vote.
+  with a 0.7 threshold vote (``TYPE_THRESHOLD``; the vote itself runs
+  in ``profiling.profiler`` and ``profiling.wide_sql``).
 
 All expressed as chained ``regexp_replace`` (whole-stage codegen, no
 Python in the hot path). The same chains are emitted as DuckDB SQL for
@@ -42,45 +41,3 @@ def symbolic_pattern_sql(col: str) -> str:
     s = f"regexp_replace({s}, '\\s', '_', 'g')"
     return s
 
-
-def regex_pattern(col: Column) -> Column:
-    """Generalize a value to an anchored validation regex.
-
-    Digit runs → ``\\d`` (kept per-char to preserve length like the
-    reference), alpha → ``[A-Za-z]``, whitespace → ``\\s``, regex
-    metacharacters escaped. The result is usable directly in ``rlike``.
-    """
-    s = col.cast("string")
-    # escape regex metacharacters that survive generalization
-    s = F.regexp_replace(s, r"([.^$*+?()\[\]{}|\\])", r"\\$1")
-    s = F.regexp_replace(s, r"[0-9]", r"\\d")
-    # placeholder must be a char that can't occur in data — a literal
-    # '@' in the value (emails!) would otherwise be clobbered into the
-    # alpha class and the pattern would reject its own source value
-    s = F.regexp_replace(s, r"[A-Za-z]", "\x01")
-    s = F.regexp_replace(s, r"\s", r"\\s")
-    s = F.regexp_replace(s, "\x01", "[A-Za-z]")
-    return F.concat(F.lit("^"), s, F.lit("$"))
-
-
-def inferred_type(ratios: dict[str, Column], null_ratio: Column) -> Column:
-    """Threshold-vote type cascade over match-ratio columns.
-
-    ``ratios`` maps type name → ratio Column (share of cells matching
-    that type's pattern). Order mirrors the reference's cascade:
-    specific types first, fallbacks last.
-    """
-    t = TYPE_THRESHOLD
-    return (
-        F.when(null_ratio >= 0.999, F.lit("empty"))
-        .when(ratios["date"] >= t, F.lit("date"))
-        .when(ratios["time_ampm"] >= t, F.lit("time_am_pm"))
-        .when(ratios["time_24h"] >= t, F.lit("time_24h"))
-        .when(ratios["datetime"] >= t, F.lit("datetime64"))
-        .when(ratios["percentage"] >= t, F.lit("percentage"))
-        .when(ratios["boolean"] >= t, F.lit("boolean"))
-        .when(ratios["integer"] >= t, F.lit("integer"))
-        .when((ratios["integer"] + ratios["float"]) >= t, F.lit("float"))
-        .when(ratios["categorical"] <= 0.1, F.lit("categorical"))
-        .otherwise(F.lit("string"))
-    )

@@ -629,17 +629,6 @@ def approx_sketch_stats_long(
 # Pass 2 — value-grain stats (modal value, pattern, Benford, bins)
 # ---------------------------------------------------------------------------
 
-def _melt(df: DataFrame, columns: list[str]) -> DataFrame:
-    """Unpivot to ``(col_name, value_str)`` cell grain.
-
-    Only two narrow columns survive the shuffle — scale note: this is
-    #cells rows but O(avg value width) bytes per row.
-    """
-    parts = [f"'{c}', CAST({_q(c)} AS STRING)" for c in columns]
-    stack_expr = f"stack({len(columns)}, {', '.join(parts)}) as (col_name, value_str)"
-    return df.select(F.expr(stack_expr))
-
-
 def _melt_k(df: DataFrame, columns: list[str], base_k: int) -> DataFrame:
     """Unpivot to ``(_ck, value_str)`` cell grain with the column
     dictionary-encoded to ``base_k + position`` — the cell-grain

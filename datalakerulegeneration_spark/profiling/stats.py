@@ -99,10 +99,6 @@ class Stat:
     ssql: Callable[[str], str]
 
 
-def _count_if(cond_sql: str) -> str:
-    return f"CAST(count_if({cond_sql}) AS DOUBLE)"
-
-
 # P4's four character classes are all over finite ASCII sets, so the
 # Spark side counts them with translate() — a per-char map lookup —
 # instead of regexp_replace: one regex pass per class per string cell

@@ -4721,12 +4721,6 @@ GROUP BY label, CAST(i - 1 AS BIGINT)
 """
 
 
-def _pair_key(cols: list[str]) -> F.Column:
-    return F.concat_ws(
-        _SEP, *[F.coalesce(F.col(f"`{c}`").cast("string"), F.lit(_NUL)) for c in cols]
-    )
-
-
 def q_dboost_discrete_stats_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D3 (DiscreteStats, analyzers/discrete.py:27-55) as ONE declarative
     pass: exact distinct-combination counts for every low-cardinality

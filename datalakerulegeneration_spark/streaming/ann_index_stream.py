@@ -10,12 +10,10 @@ sink is idempotent under foreachBatch's at-least-once contract; the
 index outlives Spark's checkpoint, so a restarted or entirely new
 stream keeps extending the same searchable index, and searches
 (``pq_search_index``) can run between batches against whatever has
-been admitted so far. Appends are ATOMIC to concurrent readers (r9):
-each micro-batch lands in a fresh versioned codes directory that is
-published by one ``os.replace`` of the codes manifest — the
-budget_stream marker pattern — so a search issued WHILE a batch is
-mid-append sees the index before the batch or after it, never a
-partially committed batch.
+been admitted so far. Each append commits through
+``streaming.committed`` (the shared protocol), so a search issued
+WHILE a batch is mid-append sees the index before the batch or after
+it, never a partially committed batch.
 """
 
 from __future__ import annotations
@@ -23,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from datalakerulegeneration_spark.ops.ann_index import pq_index_append
+from datalakerulegeneration_spark.streaming.committed import start_sink
 
 
 class AnnIndexIngester:
@@ -52,11 +51,4 @@ def ann_ingest_stream(
     returns ``(StreamingQuery, AnnIndexIngester)`` — await the query,
     then search with ``pq_search_index``."""
     ing = AnnIndexIngester(spark, path, id_col, vec_col)
-    writer = (
-        stream.writeStream.foreachBatch(ing.update)
-        .outputMode("update")
-        .trigger(availableNow=True)
-    )
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start(), ing
+    return start_sink(stream, ing.update, path, checkpoint_dir), ing

@@ -16,24 +16,19 @@ the regex-proxy default or a plugged real tokenizer
 (``ops.tokenize.TokenizerFn``) — budget admission is exactly the
 accounting decision the tokenizer seam exists for.
 
-State is one (admitted_tokens) row, committed per batch through the
-same versioned-dir + atomic-marker flip as the sketch monitors, so a
-replayed committed batch is a full no-op (state AND survivors).
-Crash between the survivors append and the marker flip re-admits at
-most that one batch on replay (duplicate rows, recoverable by exact
-dedup on id) — the fail-safe order the persisted dedup index uses:
-re-admit, never drop.
+State is one (admitted_tokens) row. Each batch commits it together
+with its survivors through ``streaming.committed`` (the shared
+protocol), and a batch id already applied is skipped: a crash or a
+replay neither re-admits nor loses a batch.
 """
 
 from __future__ import annotations
-
-import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from datalakerulegeneration_spark.ops import packing
+from datalakerulegeneration_spark.streaming.committed import CommittedState, start_sink
 
 
 class BudgetAdmitter:
@@ -57,35 +52,21 @@ class BudgetAdmitter:
         self.id_col = id_col
         self.text_col = text_col
         self.tokenizer_fn = tokenizer_fn
-        self.out_path = os.path.join(state_dir, "survivors")
-        self._prefix = os.path.join(state_dir, "budget_state")
-        self._marker = os.path.join(state_dir, "budget_APPLIED")
-
-    # -- exactly-once state plumbing (sketch-monitor pattern) -------------
-
-    def applied_batch_id(self) -> int | None:
-        if os.path.exists(self._marker):
-            with open(self._marker) as f:
-                return int(f.read().strip())
-        return None
+        self._state = CommittedState(spark, state_dir)
 
     def admitted_tokens(self) -> int:
-        b = self.applied_batch_id()
-        if b is None:
-            return 0
-        return self.spark.read.parquet(f"{self._prefix}_{b}").first()["admitted_tokens"]
+        row = self._state.read("state", "admitted_tokens bigint").first()
+        return 0 if row is None else row["admitted_tokens"]
 
     # -- foreachBatch hook -------------------------------------------------
 
     def update(self, batch: DataFrame, batch_id: int) -> None:
-        last = self.applied_batch_id()
-        if last is not None and batch_id <= last:
-            return  # replayed committed batch: exactly-once no-op
-        cum = 0 if last is None else int(
-            self.spark.read.parquet(f"{self._prefix}_{last}").first()["admitted_tokens"]
-        )
+        if self._state.applied(batch_id):
+            return
+        cum = self.admitted_tokens()
         remaining = self.budget - cum
         admitted_w = 0
+        tx = self._state.begin()
         if remaining > 0:
             from datalakerulegeneration_spark.ops.tokenize import token_count_col
 
@@ -107,29 +88,22 @@ class BudgetAdmitter:
             adm = packed.where(
                 F.col("offset") + F.col("weight") <= F.lit(remaining)
             ).select(F.col("id").alias(self.id_col), *carry, "weight")
-            # stage once; both the survivor append and the token total
-            # derive from the SAME persisted rows (the dedup-index trick)
-            staging = os.path.join(self.state_dir, f".staging_{batch_id}")
-            adm.write.mode("overwrite").parquet(staging)
-            staged = self.spark.read.parquet(staging)
-            admitted_w = staged.agg(
+            # the token total derives from the survivors as written
+            written = self.spark.read.parquet(*tx.write("survivors", adm))
+            admitted_w = written.agg(
                 F.coalesce(F.sum("weight"), F.lit(0)).cast("bigint")
             ).first()[0]
-            staged.drop("weight").write.mode("append").parquet(self.out_path)
-            shutil.rmtree(staging, ignore_errors=True)
-        self.spark.createDataFrame(
-            [(int(cum + admitted_w),)], "admitted_tokens bigint"
-        ).write.mode("overwrite").parquet(f"{self._prefix}_{batch_id}")
-        os.makedirs(self.state_dir, exist_ok=True)
-        tmp = self._marker + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(str(batch_id))
-        os.replace(tmp, self._marker)  # atomic commit point
-        if last is not None:
-            shutil.rmtree(f"{self._prefix}_{last}", ignore_errors=True)
+        tx.write(
+            "state",
+            self.spark.createDataFrame(
+                [(int(cum + admitted_w),)], "admitted_tokens bigint"
+            ),
+            replace=True,
+        )
+        tx.commit(batch_id)
 
     def survivors(self) -> DataFrame:
-        return self.spark.read.parquet(self.out_path)
+        return self._state.read("survivors").drop("weight")
 
 
 def budget_admission_stream(
@@ -145,11 +119,4 @@ def budget_admission_stream(
     """Wire a streaming document DataFrame into the budget admitter;
     returns ``(StreamingQuery, BudgetAdmitter)``."""
     adm = BudgetAdmitter(spark, state_dir, budget, id_col, text_col, tokenizer_fn)
-    writer = (
-        stream.writeStream.foreachBatch(adm.update)
-        .outputMode("update")
-        .trigger(availableNow=True)
-    )
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start(), adm
+    return start_sink(stream, adm.update, state_dir, checkpoint_dir), adm

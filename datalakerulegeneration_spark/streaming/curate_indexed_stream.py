@@ -2,58 +2,32 @@
 
 ``curate_stream`` is the watermark-state prefix of the batch flagship;
 ``url_dedup_stream`` and ``dedup_index_stream`` each maintain ONE
-persisted index with at-least-once commit ordering (survivors land
-before keys: a crash between the appends re-admits, never drops).
-This module is the COMPOSITION a production ingest pipeline actually
-runs: quality gate → canonical-URL dedup (index 1) → content-digest
-dedup (index 2) → survivor corpus — and because two sinks compose,
-the single-sink "survivors before keys" ordering is no longer enough:
-a crash after index 1 committed but before index 2 saw the batch
-would starve stage 2 of its input on replay (stage-1's anti join eats
-the whole batch), silently DROPPING documents.
-
-The fix is a stronger commit protocol than either single sink needs —
-per-batch OVERWRITE dirs plus one atomic marker, which buys true
-exactly-once (byte-identical replay at EVERY crash point):
-
-* each batch writes its survivors / url-keys / digests to
-  ``<root>/batch=<id>/`` with ``mode("overwrite")`` — idempotent, and
-  deterministic given the same committed state;
-* every read (the two anti-join index reads AND the public views)
-  unions ONLY the batch dirs listed in the ``COMMITTED`` marker file,
-  so half-written dirs from a crashed attempt are invisible;
-* the marker is rewritten whole and ``os.replace``d — the single
-  atomic commit point, after which a replay of the batch is a no-op.
-
-Crash anywhere before the flip: no committed state changed, the
-replayed batch recomputes from the same inputs, overwrites the same
-dirs with the same rows, and flips. Crash after: no-op. Either way the
-final corpus and both indexes are byte-identical to a run that never
-crashed — proven boundary-by-boundary in
-tests/test_streaming.py::test_curate_indexed_crash_matrix.
+persisted index. This module is the COMPOSITION a production ingest
+pipeline actually runs: quality gate → canonical-URL dedup (index 1) →
+content-digest dedup (index 2) → survivor corpus. A batch's three
+outputs (survivors, url keys, digests) commit together in one flip
+through ``streaming.committed`` (the shared protocol) — were index 1
+committed before index 2 saw the batch, a replay would find the whole
+batch URL-deduped and starve stage 2 — and a batch id already applied
+is skipped.
 
 CONTINUITY CONTRACT: batch-id-keyed idempotence (the standard Delta
 ``(appId, batchId)`` transactional-sink convention) requires the state
-dir and the stream CHECKPOINT to live and die together. Restarting
-against the same state dir with a FRESH checkpoint is safe only as a
-full replay of the UNCHANGED source (the marker makes it a no-op); if
-new source data has also arrived it would be re-batched under already-
-committed ids and skipped. Continue ingestion under the original
-checkpoint — the same rule every checkpoint-keyed foreachBatch sink
-carries.
+dir and the stream CHECKPOINT to live and die together (the default
+checkpoint lives inside the state dir). Restarting against the same
+state dir with a FRESH checkpoint is safe only as a full replay of the
+UNCHANGED source; if new source data has also arrived it would be
+re-batched under already-committed ids and skipped.
 
 Scale shape: per batch, one map-side canonical-key/quality/digest
 projection, one window per within-batch keeper, two digest-keyed
 broadcast-able anti joins against the committed index frames (32-char
 keys — ≈0.04% of corpus bytes at 100 TB), three O(batch) parquet
 writes. The committed-dir union is a file-listing concern only; at
-compaction time the batch dirs coalesce like any parquet table.
+compaction time the versions coalesce like any parquet table.
 """
 
 from __future__ import annotations
-
-import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -64,15 +38,16 @@ from datalakerulegeneration_spark.ops.domains import (
     with_canonical_url,
 )
 from datalakerulegeneration_spark.ops import textqa
+from datalakerulegeneration_spark.streaming.committed import CommittedState, start_sink
+from datalakerulegeneration_spark.streaming.url_dedup_stream import canon_key
 
-_NOURL_PREFIX = "\x00nourl:"
 _URL_INDEX_SCHEMA = "canon_key string"
 _DIGEST_INDEX_SCHEMA = "text_digest string"
 
 
 class CurateIndexedDeduper:
     """foreachBatch sink: quality gate → URL dedup → content dedup,
-    two persisted indexes, one atomic commit marker per batch."""
+    two persisted indexes, one commit per batch."""
 
     def __init__(
         self,
@@ -93,63 +68,13 @@ class CurateIndexedDeduper:
         self.quality_min = quality_min
         self.strip_www = strip_www
         self.drop_params = tuple(drop_params)
-        self._surv_root = os.path.join(state_dir, "survivors")
-        self._url_root = os.path.join(state_dir, "url_index")
-        self._digest_root = os.path.join(state_dir, "digest_index")
-        self._marker = os.path.join(state_dir, "COMMITTED")
-        # test seam: raise after the named write ('survivors',
-        # 'digest_index', 'url_index') to simulate a crash mid-commit
-        self.failpoint: str | None = None
-
-    # -- commit bookkeeping ------------------------------------------------
-
-    def committed_ids(self) -> list[int]:
-        if not os.path.exists(self._marker):
-            return []
-        with open(self._marker) as fh:
-            return [int(x) for x in fh.read().split()]
-
-    def _read_committed(self, root: str, schema: str) -> DataFrame:
-        # The COMMITTED marker and the per-batch dirs live and die
-        # together (dirs are written BEFORE the marker flip, and an
-        # empty batch still writes a directory). A committed id whose
-        # directory is gone is state corruption — silently skipping it
-        # would shrink the indexes and re-admit duplicates, so fail
-        # loudly instead (r10 ADVICE).
-        paths = []
-        missing = []
-        for b in self.committed_ids():
-            p = os.path.join(root, f"batch={b}")
-            (paths if os.path.exists(p) else missing).append(p)
-        if missing:
-            raise RuntimeError(
-                f"exactly-once state corrupted under {root}: COMMITTED "
-                f"lists batch dirs that do not exist: {missing}"
-            )
-        if not paths:
-            return self.spark.createDataFrame([], schema)
-        return self.spark.read.parquet(*paths)
-
-    def _maybe_fail(self, point: str) -> None:
-        if self.failpoint == point:
-            raise RuntimeError(f"injected crash after {point}")
+        self._state = CommittedState(spark, state_dir)
 
     # -- foreachBatch hook -------------------------------------------------
 
     def update(self, batch: DataFrame, batch_id: int) -> None:
-        committed = self.committed_ids()
-        if batch_id in committed:
-            # replay of a committed batch: exactly-once no-op — but a
-            # crash BETWEEN the marker flip and the staging cleanup
-            # leaves a full batch copy behind; reclaim it here so a
-            # long-running crashy stream cannot hoard one copy per
-            # crash (r10 review)
-            shutil.rmtree(
-                os.path.join(self.state_dir, f".staging_{batch_id}"),
-                ignore_errors=True,
-            )
+        if self._state.applied(batch_id):
             return
-
         d = batch
         if self.quality_min is not None:
             d = d.where(
@@ -160,22 +85,15 @@ class CurateIndexedDeduper:
         # semantics)
         d = with_canonical_url(
             d, self.url_col, "canonical_url", self.strip_www, self.drop_params
-        ).withColumn(
-            "_canon_key",
-            F.coalesce(
-                F.col("canonical_url"),
-                F.concat(F.lit(_NOURL_PREFIX), F.col(self.id_col).cast("string")),
-            ),
-        )
+        ).withColumn("_canon_key", canon_key(self.id_col))
         w_url = Window.partitionBy("_canon_key").orderBy(F.col(self.id_col).asc())
         kept = (
             d.withColumn("_rn", F.row_number().over(w_url))
             .where(F.col("_rn") == 1)
             .drop("_rn")
         )
-        url_index = self._read_committed(self._url_root, _URL_INDEX_SCHEMA)
         s1 = kept.join(
-            url_index.select(F.col("canon_key").alias("_canon_key")),
+            self.url_index().select(F.col("canon_key").alias("_canon_key")),
             "_canon_key",
             "left_anti",
         )
@@ -187,64 +105,36 @@ class CurateIndexedDeduper:
             .where(F.col("_rn") == 1)
             .drop("_rn")
         )
-        digest_index = self._read_committed(self._digest_root, _DIGEST_INDEX_SCHEMA)
         s2 = s2.join(
-            digest_index.select(F.col("text_digest").alias("_digest")),
+            self.digest_index().select(F.col("text_digest").alias("_digest")),
             "_digest",
             "left_anti",
         )
-        # one staging write; every output derives from the SAME rows
-        staging = os.path.join(self.state_dir, f".staging_{batch_id}")
-        s2.write.mode("overwrite").parquet(staging)
-        staged = self.spark.read.parquet(staging)
-
-        # per-batch OVERWRITE dirs: idempotent under replay, invisible
-        # until the marker lists this batch id
-        staged.drop("_canon_key", "_digest").write.mode("overwrite").parquet(
-            os.path.join(self._surv_root, f"batch={batch_id}")
+        tx = self._state.begin()
+        written = self.spark.read.parquet(
+            *tx.write("survivors", s2.drop("_canon_key", "_digest"))
         )
-        self._maybe_fail("survivors")
-        staged.select(F.col("_digest").alias("text_digest")).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(self._digest_root, f"batch={batch_id}"))
-        self._maybe_fail("digest_index")
+        tx.write(
+            "digest_index",
+            written.select(F.md5(F.col(self.text_col)).alias("text_digest")),
+        )
         # url keys come from s1 (every key this batch's URL stage
         # admitted — content-duplicate docs still CLAIM their URL, the
-        # standalone UrlDeduper semantics). s1 is deterministic given
-        # (batch, committed state) and the dir is overwrite, so a
-        # replayed crashed attempt rewrites the same keys; committed-
-        # only index reads keep the half-written dir invisible either
-        # way.
-        s1.select(F.col("_canon_key").alias("canon_key")).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(self._url_root, f"batch={batch_id}"))
-        self._maybe_fail("url_index")
-
-        # the atomic commit point: rewrite the whole committed list
-        tmp = self._marker + ".tmp"
-        os.makedirs(self.state_dir, exist_ok=True)
-        with open(tmp, "w") as fh:
-            fh.write(" ".join(str(b) for b in committed + [batch_id]))
-        os.replace(tmp, self._marker)
-        shutil.rmtree(staging, ignore_errors=True)
+        # standalone UrlDeduper semantics); s1 is deterministic given
+        # (batch, committed state)
+        tx.write("url_index", s1.select(F.col("_canon_key").alias("canon_key")))
+        tx.commit(batch_id)
 
     # -- views (committed state only) --------------------------------------
 
     def survivors(self) -> DataFrame:
-        paths = [
-            os.path.join(self._surv_root, f"batch={b}")
-            for b in self.committed_ids()
-            if os.path.exists(os.path.join(self._surv_root, f"batch={b}"))
-        ]
-        if not paths:
-            raise ValueError("curate_indexed: no committed batches yet")
-        return self.spark.read.parquet(*paths)
+        return self._state.read("survivors")
 
     def url_index(self) -> DataFrame:
-        return self._read_committed(self._url_root, _URL_INDEX_SCHEMA)
+        return self._state.read("url_index", _URL_INDEX_SCHEMA)
 
     def digest_index(self) -> DataFrame:
-        return self._read_committed(self._digest_root, _DIGEST_INDEX_SCHEMA)
+        return self._state.read("digest_index", _DIGEST_INDEX_SCHEMA)
 
 
 def curate_indexed_stream(
@@ -257,16 +147,4 @@ def curate_indexed_stream(
     """Wire the composed sink to a stream; returns
     ``(StreamingQuery, CurateIndexedDeduper)``."""
     dd = CurateIndexedDeduper(spark, state_dir, **kw)
-    q = (
-        stream.writeStream.foreachBatch(dd.update)
-        .option(
-            "checkpointLocation",
-            checkpoint_dir or os.path.join(state_dir, "_checkpoint"),
-        )
-        # drain-what's-there then STOP (the sibling index sinks'
-        # contract); long-lived ingestion re-launches per drain cycle
-        # or swaps in a processingTime trigger via its own writer
-        .trigger(availableNow=True)
-        .start()
-    )
-    return q, dd
+    return start_sink(stream, dd.update, state_dir, checkpoint_dir), dd

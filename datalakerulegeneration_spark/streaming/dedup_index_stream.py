@@ -16,16 +16,18 @@ bytes); the per-batch cost is one anti join keyed by digest against
 it. The same ``IncrementalDeduper.update`` hook also serves plain
 batch jobs (the nightly-append flow) — streaming and batch share one
 code path, like the incremental profiler.
+
+Survivors and their digests commit together through
+``streaming.committed`` (the shared protocol); the anti-join against
+the committed index makes a replayed batch admit nothing.
 """
 
 from __future__ import annotations
 
-import os
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession
 
 from datalakerulegeneration_spark.ops.dedup import incremental_dedup_against_index
+from datalakerulegeneration_spark.streaming.committed import CommittedState, start_sink
 
 _INDEX_SCHEMA = "text_digest string"
 
@@ -41,51 +43,30 @@ class IncrementalDeduper:
         text_col: str = "text",
     ):
         self.spark = spark
-        self.index_path = os.path.join(state_dir, "digest_index")
-        self.out_path = os.path.join(state_dir, "survivors")
         self.id_col = id_col
         self.text_col = text_col
-
-    def _index(self) -> DataFrame:
-        if os.path.exists(self.index_path):
-            return self.spark.read.parquet(self.index_path)
-        return self.spark.createDataFrame([], _INDEX_SCHEMA)
+        self._state = CommittedState(spark, state_dir)
 
     # -- foreachBatch hook -------------------------------------------------
 
     def update(self, batch: DataFrame, batch_id: int) -> None:
         surv = incremental_dedup_against_index(
-            batch, self._index(), self.id_col, self.text_col
+            batch, self.index(), self.id_col, self.text_col
         )
-        # stage THIS batch's survivors once, then derive both appends
-        # from the staged parquet: (1) the two destinations stay
-        # consistent with what was actually persisted rather than two
-        # recomputations of a lazy plan, and (2) per-batch work stays
-        # O(batch) — deriving digests from the full survivors dir would
-        # re-scan the entire admitted history every micro-batch.
-        staging = os.path.join(os.path.dirname(self.out_path), f".staging_{batch_id}")
-        surv.write.mode("overwrite").parquet(staging)
-        staged = self.spark.read.parquet(staging)
-        # survivors land before digests: if the job dies between the
-        # writes, the next run re-admits at most this batch's unindexed
-        # survivors (duplicate rows, recoverable by re-deduping the
-        # output) rather than silently DROPPING documents whose digests
-        # were indexed but whose rows were never written.
-        staged.write.mode("append").parquet(self.out_path)
-        staged.select("text_digest").write.mode("append").parquet(self.index_path)
-        # both appends committed → the staging copy is dead weight; a
-        # long-running stream must not hoard a full extra copy of every
-        # admitted batch. A crash before this point leaves one stale
-        # dir, which the replayed batch overwrites and then removes.
-        shutil.rmtree(staging, ignore_errors=True)
+        # the digests derive from the survivors as written: per-batch
+        # work stays O(batch), and the two outputs cannot disagree
+        tx = self._state.begin()
+        written = self.spark.read.parquet(*tx.write("survivors", surv))
+        tx.write("digest_index", written.select("text_digest"))
+        tx.commit(batch_id)
 
     # -- views -------------------------------------------------------------
 
     def survivors(self) -> DataFrame:
-        return self.spark.read.parquet(self.out_path)
+        return self._state.read("survivors")
 
     def index(self) -> DataFrame:
-        return self._index()
+        return self._state.read("digest_index", _INDEX_SCHEMA)
 
 
 def incremental_dedup_stream(
@@ -100,11 +81,4 @@ def incremental_dedup_stream(
     returns ``(StreamingQuery, IncrementalDeduper)`` — await the query,
     then read results through the deduper's views."""
     dd = IncrementalDeduper(spark, state_dir, id_col, text_col)
-    writer = (
-        stream.writeStream.foreachBatch(dd.update)
-        .outputMode("update")
-        .trigger(availableNow=True)
-    )
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start(), dd
+    return start_sink(stream, dd.update, state_dir, checkpoint_dir), dd

@@ -14,19 +14,13 @@ public suffixes) are a capped group like any other — exempt them
 upstream if unattributed docs must all survive.
 
 State is the (domain, n_admitted) count table — O(distinct domains)
-rows, independent of stream history length — committed per batch
-through the same versioned-dir + atomic-marker flip as the sketch
-monitors and the budget admitter, so a replayed committed batch is a
-full no-op. Crash between the survivors append and the marker flip
-re-admits at most that one batch on replay (duplicate rows,
-recoverable by exact dedup on id) — the fail-safe order the persisted
-dedup index uses: re-admit, never drop.
+rows, independent of stream history length. Each batch commits it
+together with its survivors through ``streaming.committed`` (the shared
+protocol), and a batch id already applied is skipped: a crash or a
+replay neither re-admits nor loses a batch.
 """
 
 from __future__ import annotations
-
-import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -36,6 +30,7 @@ from datalakerulegeneration_spark.ops.domains import (
     with_registered_domain,
 )
 from datalakerulegeneration_spark.ops.sampling import _hash_bucket
+from datalakerulegeneration_spark.streaming.committed import CommittedState, start_sink
 
 _STATE_SCHEMA = "domain string, n_admitted bigint"
 
@@ -66,36 +61,18 @@ class DomainGuard:
         self.url_col = url_col
         self.suffixes = suffixes
         self.salt = salt
-        self.out_path = os.path.join(state_dir, "survivors")
-        self._prefix = os.path.join(state_dir, "domain_state")
-        self._marker = os.path.join(state_dir, "domain_APPLIED")
-
-    # -- exactly-once state plumbing (sketch-monitor pattern) -------------
-
-    def applied_batch_id(self) -> int | None:
-        if os.path.exists(self._marker):
-            with open(self._marker) as f:
-                return int(f.read().strip())
-        return None
+        self._state = CommittedState(spark, state_dir)
 
     def admitted_counts(self) -> DataFrame:
         """Whole-stream (domain, n_admitted) — empty before batch 0."""
-        b = self.applied_batch_id()
-        if b is None:
-            return self.spark.createDataFrame([], _STATE_SCHEMA)
-        return self.spark.read.parquet(f"{self._prefix}_{b}")
+        return self._state.read("state", _STATE_SCHEMA)
 
     # -- foreachBatch hook -------------------------------------------------
 
     def update(self, batch: DataFrame, batch_id: int) -> None:
-        last = self.applied_batch_id()
-        if last is not None and batch_id <= last:
-            return  # replayed committed batch: exactly-once no-op
-        prior = (
-            self.spark.read.parquet(f"{self._prefix}_{last}")
-            if last is not None
-            else self.spark.createDataFrame([], _STATE_SCHEMA)
-        )
+        if self._state.applied(batch_id):
+            return
+        prior = self.admitted_counts()
         d = batch
         if self.blocked:
             d = blocklist_filter(d, self.url_col, self.blocked, self.suffixes)
@@ -114,15 +91,14 @@ class DomainGuard:
             F.coalesce(F.col("n_admitted"), F.lit(0)) + F.col("_rn")
             <= F.lit(self.max_per_domain)
         )
-        # stage once; the survivor append and the per-domain totals
-        # derive from the SAME persisted rows (the dedup-index trick)
-        staging = os.path.join(self.state_dir, f".staging_{batch_id}")
-        adm.select(*batch.columns, "_dom").write.mode("overwrite").parquet(staging)
-        staged = self.spark.read.parquet(staging)
-        batch_counts = staged.groupBy(F.col("_dom").alias("domain")).agg(
+        # the per-domain totals derive from the survivors as written
+        tx = self._state.begin()
+        written = self.spark.read.parquet(
+            *tx.write("survivors", adm.select(*batch.columns, "_dom"))
+        )
+        batch_counts = written.groupBy(F.col("_dom").alias("domain")).agg(
             F.count(F.lit(1)).cast("bigint").alias("_n_new")
         )
-        staged.drop("_dom").write.mode("append").parquet(self.out_path)
         new_state = (
             prior.join(batch_counts, prior["domain"].eqNullSafe(batch_counts["domain"]), "full")
             .select(
@@ -135,18 +111,11 @@ class DomainGuard:
                 .alias("n_admitted"),
             )
         )
-        new_state.write.mode("overwrite").parquet(f"{self._prefix}_{batch_id}")
-        shutil.rmtree(staging, ignore_errors=True)
-        os.makedirs(self.state_dir, exist_ok=True)
-        tmp = self._marker + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(str(batch_id))
-        os.replace(tmp, self._marker)  # atomic commit point
-        if last is not None:
-            shutil.rmtree(f"{self._prefix}_{last}", ignore_errors=True)
+        tx.write("state", new_state, replace=True)
+        tx.commit(batch_id)
 
     def survivors(self) -> DataFrame:
-        return self.spark.read.parquet(self.out_path)
+        return self._state.read("survivors").drop("_dom")
 
 
 def domain_guard_stream(
@@ -165,11 +134,4 @@ def domain_guard_stream(
     g = DomainGuard(
         spark, state_dir, max_per_domain, blocked_domains, id_col, url_col, suffixes
     )
-    writer = (
-        stream.writeStream.foreachBatch(g.update)
-        .outputMode("update")
-        .trigger(availableNow=True)
-    )
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start(), g
+    return start_sink(stream, g.update, state_dir, checkpoint_dir), g

@@ -31,21 +31,15 @@ pass runs the digest-grain LSH machinery over the batch alone. Index
 size is bands × 48 bytes per admitted doc — ~0.05% of corpus bytes at
 crawl document sizes.
 
-Crash/replay behavior mirrors the exact deduper: survivors append
-BEFORE index bands, so a crash between the writes re-admits at most
-one batch's unindexed survivors (recoverable duplicates) instead of
-silently dropping documents. A replayed committed batch self-collides
-with its own index rows at Jaccard 1.0 and admits nothing new (only
-signature-less docs — NULL/short texts — would re-append; bound their
-duplication by checkpointing the source, which prevents replay of
-committed batches in the first place). Per-batch staging parquet is
-removed once both appends commit.
+Survivors and their bands commit together through
+``streaming.committed`` (the shared protocol). A replayed committed
+batch self-collides with its own index rows at Jaccard 1.0, and its
+signature-less docs are already survivors by id, so it admits nothing.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -60,7 +54,9 @@ from datalakerulegeneration_spark.ops.dedup import (
     minhash_signatures,
     shingles,
 )
+from datalakerulegeneration_spark.streaming.committed import CommittedState, start_sink
 
+_INDEX = "band_index"
 _INDEX_SCHEMA = "doc_id string, band int, bh string"
 
 
@@ -81,19 +77,16 @@ class NearDupDeduper:
         bands: int = N_BANDS,
     ):
         self.spark = spark
-        self.index_path = os.path.join(state_dir, "band_index")
-        self.out_path = os.path.join(state_dir, "survivors")
+        self._state = CommittedState(spark, state_dir)
+        # every committed band version sits in this dir (the manifest
+        # lives one level up), so it reads as one parquet dataset
+        self.index_path = os.path.join(state_dir, _INDEX)
         self.id_col = id_col
         self.text_col = text_col
         self.threshold = threshold
         self.n = n
         self.k = k
         self.bands = bands
-
-    def _index(self) -> DataFrame:
-        if os.path.exists(self.index_path):
-            return self.spark.read.parquet(self.index_path)
-        return self.spark.createDataFrame([], _INDEX_SCHEMA)
 
     def _doc_bands(self, docs: DataFrame) -> DataFrame:
         """(doc_id string, band, bh) for every doc with ≥ n tokens."""
@@ -124,7 +117,7 @@ class NearDupDeduper:
         # 1. cross-batch probe: batch digests colliding with admitted docs
         cand = (
             bands_b.withColumnRenamed("id", "dg")
-            .join(self._index(), ["band", "bh"])
+            .join(self.index(), ["band", "bh"])
             .select("dg", "doc_id")
             .distinct()
         )
@@ -132,7 +125,8 @@ class NearDupDeduper:
         #    collided ADMITTED docs (semi-join into survivors) and score
         #    against the batch digest shingles under disjoint 'a:'/'b:'
         #    key prefixes ('a' < 'b' keeps jaccard_pairs' ordering)
-        if os.path.exists(self.out_path):
+        committed = bool(self._state.paths("survivors"))
+        if committed:
             surv_cand = self.survivors().join(
                 cand.select(F.col("doc_id").alias("__cid")).distinct(),
                 F.col(idc).cast("string") == F.col("__cid"),
@@ -181,27 +175,30 @@ class NearDupDeduper:
         sigless = base.join(
             nn.join(shingled_dgs, "dg").select("id"), "id", "left_anti"
         ).select("id")
+        if committed:
+            # no bands to self-collide with: a replayed batch finds its
+            # signature-less docs among the survivors by id instead
+            sigless = sigless.join(
+                self.survivors().select(F.col(idc).alias("id")), "id", "left_anti"
+            )
         admitted = base.join(
             kept_ids.unionByName(sigless).distinct(), "id", "left_semi"
         ).select(F.col("id").alias(idc), F.col("txt").alias(txc))
 
-        # 5. stage once; survivors land before index bands (see module
-        #    docstring for the crash-window argument); bands recompute
-        #    deterministically from the staged rows
-        staging = os.path.join(os.path.dirname(self.out_path), f".staging_{batch_id}")
-        admitted.write.mode("overwrite").parquet(staging)
-        staged = self.spark.read.parquet(staging)
-        staged.write.mode("append").parquet(self.out_path)
-        self._doc_bands(staged).write.mode("append").parquet(self.index_path)
-        shutil.rmtree(staging, ignore_errors=True)
+        # 5. bands recompute deterministically from the survivors as
+        #    written
+        tx = self._state.begin()
+        written = self.spark.read.parquet(*tx.write("survivors", admitted))
+        tx.write(_INDEX, self._doc_bands(written))
+        tx.commit(batch_id)
 
     # -- views -------------------------------------------------------------
 
     def survivors(self) -> DataFrame:
-        return self.spark.read.parquet(self.out_path)
+        return self._state.read("survivors")
 
     def index(self) -> DataFrame:
-        return self._index()
+        return self._state.read(_INDEX, _INDEX_SCHEMA)
 
 
 def neardup_dedup_stream(
@@ -216,11 +213,4 @@ def neardup_dedup_stream(
     """Wire a streaming DataFrame into the persisted-signature near-dup
     deduper; returns ``(StreamingQuery, NearDupDeduper)``."""
     dd = NearDupDeduper(spark, state_dir, id_col, text_col, threshold)
-    writer = (
-        stream.writeStream.foreachBatch(dd.update)
-        .outputMode("update")
-        .trigger(availableNow=True)
-    )
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start(), dd
+    return start_sink(stream, dd.update, state_dir, checkpoint_dir), dd

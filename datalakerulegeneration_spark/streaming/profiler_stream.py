@@ -16,13 +16,12 @@ distinct is a batch-mode capability (documented tolerance).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from datalakerulegeneration_spark.profiling.profiler import column_kind
 from datalakerulegeneration_spark.profiling import stats as S
+from datalakerulegeneration_spark.streaming.committed import CommittedState, start_sink
 
 
 def _partial_stats(batch: DataFrame, columns: list[str]) -> DataFrame:
@@ -117,35 +116,29 @@ def finalize_state(state: DataFrame) -> DataFrame:
 
 
 class IncrementalProfiler:
-    """foreachBatch sink maintaining a mergeable stats table on disk."""
+    """foreachBatch sink maintaining a mergeable stats table on disk,
+    committed through ``streaming.committed``: a batch id already
+    applied is skipped, so a replay never counts a batch twice."""
 
     def __init__(self, spark: SparkSession, state_dir: str, columns: list[str]):
         self.spark = spark
         self.state_dir = state_dir
         self.columns = columns
+        self._state = CommittedState(spark, state_dir)
 
     # -- foreachBatch hook -------------------------------------------------
 
     def update(self, batch: DataFrame, batch_id: int) -> None:
-        part = _partial_stats(batch, self.columns)
-        state_path = os.path.join(self.state_dir, "state")
-        if os.path.exists(state_path):
-            prev = self.spark.read.parquet(state_path)
-            merged = merge_partials(prev, part)
-        else:
-            merged = part
-        tmp = state_path + ".tmp"
-        merged.write.mode("overwrite").parquet(tmp)
-        final = self.spark.read.parquet(tmp)
-        final.write.mode("overwrite").parquet(state_path)
+        self._state.fold(
+            "state", _partial_stats(batch, self.columns), merge_partials, batch_id
+        )
 
     # -- profile view ------------------------------------------------------
 
     def finalize(self) -> DataFrame:
         """Derive profile stats from the merged state — same formulas as
         the batch registry (null_ratio, numeric_mean/std, distinct)."""
-        state = self.spark.read.parquet(os.path.join(self.state_dir, "state"))
-        return finalize_state(state)
+        return finalize_state(self._state.read("state"))
 
 
 def stream_profile(
@@ -157,17 +150,9 @@ def stream_profile(
 ):
     """Wire a streaming DataFrame into the incremental profiler.
 
-    Returns the started StreamingQuery (caller awaits termination).
-    Use ``trigger(availableNow=True)`` semantics for catch-up profiling
-    of a file stream.
+    Returns ``(StreamingQuery, IncrementalProfiler)``; the query drains
+    what the source holds and stops (the caller awaits termination).
     """
     cols = columns or stream.columns
     prof = IncrementalProfiler(spark, state_dir, cols)
-    writer = (
-        stream.writeStream.foreachBatch(prof.update)
-        .outputMode("update")
-        .trigger(availableNow=True)
-    )
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start(), prof
+    return start_sink(stream, prof.update, state_dir, checkpoint_dir), prof

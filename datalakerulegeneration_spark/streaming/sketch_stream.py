@@ -10,77 +10,34 @@ across the WHOLE stream history from constant-size state, regardless
 of how many loads or how high the cardinality — the 100 TB shape for
 monitoring questions that don't justify an exact distinct-value table.
 
-**Replay idempotency.** ``foreachBatch`` re-delivers the last
-uncommitted micro-batch after a crash (state write succeeded, source
-checkpoint commit didn't). For the ADDITIVE Count-Min fold, folding
-that batch twice double-counts silently; even the max-merge HLL is
-only safe by accident. Both monitors therefore keep exactly-once state
-the standard way: the merged sketch is written to a per-batch
-VERSIONED directory (``*_state_{batch_id}``) and a marker file is
-atomically flipped (``os.replace``) to point at it only after the
-write completes. ``update`` no-ops when the incoming batch_id is ≤ the
-marker's. Crash before the flip → replay rebuilds the same versioned
-dir from the still-marked previous state and flips; crash after →
-replay no-ops. The guard assumes what foreachBatch itself assumes: one
-logical stream per state dir with a CHECKPOINTED source, so batch ids
-are monotone across restarts (an un-checkpointed stream restarts ids
-at 0 — there the guard, like foreachBatch replay semantics generally,
-does not apply).
+Both monitors commit each fold through ``streaming.committed`` (the
+shared protocol) and skip a batch id they have already applied, so the
+additive Count-Min fold never double-counts a replayed batch.
 """
 
 from __future__ import annotations
-
-import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
 from datalakerulegeneration_spark.ops.hll import hll_estimate, hll_merge, hll_sketch
 from datalakerulegeneration_spark.ops.sketch import cm_estimate, cm_merge, cm_sketch
+from datalakerulegeneration_spark.streaming.committed import CommittedState, start_sink
 
 
 class _MergeMonitor:
-    """Shared exactly-once fold: versioned state dirs + atomic marker."""
+    """Shared state of the sketch monitors: one folded sketch."""
 
-    def __init__(self, spark: SparkSession, state_dir: str, name: str):
+    def __init__(self, spark: SparkSession, state_dir: str):
         self.spark = spark
         self.state_dir = state_dir
-        self._prefix = os.path.join(state_dir, f"{name}_state")
-        self._marker = os.path.join(state_dir, f"{name}_APPLIED")
+        self._state = CommittedState(spark, state_dir)
 
     def applied_batch_id(self) -> int | None:
         """batch_id of the last fully-committed fold, or None."""
-        if os.path.exists(self._marker):
-            with open(self._marker) as f:
-                return int(f.read().strip())
-        return None
-
-    def _state_path(self, batch_id: int) -> str:
-        return f"{self._prefix}_{batch_id}"
+        return self._state.batch_id()
 
     def sketch(self) -> DataFrame:
-        b = self.applied_batch_id()
-        if b is None:
-            raise FileNotFoundError(f"no committed sketch state under {self.state_dir}")
-        return self.spark.read.parquet(self._state_path(b))
-
-    def _fold(self, part: DataFrame, batch_id: int, merge) -> None:
-        last = self.applied_batch_id()
-        if last is not None and batch_id <= last:
-            return  # replayed, already-committed batch: exactly-once no-op
-        merged = part if last is None else merge(
-            self.spark.read.parquet(self._state_path(last)), part
-        )
-        # versioned dir: reads prev state while writing the new one —
-        # no overwrite-while-reading tmp dance needed (one write, not two)
-        merged.write.mode("overwrite").parquet(self._state_path(batch_id))
-        os.makedirs(self.state_dir, exist_ok=True)
-        tmp = self._marker + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(str(batch_id))
-        os.replace(tmp, self._marker)  # atomic commit point
-        if last is not None:
-            shutil.rmtree(self._state_path(last), ignore_errors=True)
+        return self._state.read("sketch")
 
 
 class CMSketchMonitor(_MergeMonitor):
@@ -95,13 +52,15 @@ class CMSketchMonitor(_MergeMonitor):
         depth: int = 4,
         width: int = 256,
     ):
-        super().__init__(spark, state_dir, "cm")
+        super().__init__(spark, state_dir)
         self.col = col
         self.depth = depth
         self.width = width
 
     def update(self, batch: DataFrame, batch_id: int) -> None:
-        self._fold(cm_sketch(batch, self.col, self.depth, self.width), batch_id, cm_merge)
+        self._state.fold(
+            "sketch", cm_sketch(batch, self.col, self.depth, self.width), cm_merge, batch_id
+        )
 
     def estimate(self, values: DataFrame) -> DataFrame:
         """Point estimates ``(value, est)`` for ``values[self.col]``
@@ -121,22 +80,15 @@ def sketch_stream(
     """Wire a streaming DataFrame into the sketch monitor; returns
     ``(StreamingQuery, CMSketchMonitor)``."""
     mon = CMSketchMonitor(spark, state_dir, col, depth, width)
-    writer = (
-        stream.writeStream.foreachBatch(mon.update)
-        .outputMode("update")
-        .trigger(availableNow=True)
-    )
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start(), mon
+    return start_sink(stream, mon.update, state_dir, checkpoint_dir), mon
 
 
 class HLLMonitor(_MergeMonitor):
     """foreachBatch sink folding per-batch HLL registers into parquet
     state — the streaming distinct-count monitor (optionally grouped,
     e.g. distinct users per event_type across all loads). Register
-    merge is MAX (idempotent on its own), but the same versioned-state
-    commit keeps the two monitors' crash semantics identical."""
+    merge is MAX (idempotent on its own), but the same commit keeps the
+    two monitors' crash semantics identical."""
 
     def __init__(
         self,
@@ -146,14 +98,14 @@ class HLLMonitor(_MergeMonitor):
         m: int = 256,
         group_cols: list[str] | None = None,
     ):
-        super().__init__(spark, state_dir, "hll")
+        super().__init__(spark, state_dir)
         self.col = col
         self.m = m
         self.group_cols = list(group_cols or [])
 
     def update(self, batch: DataFrame, batch_id: int) -> None:
-        self._fold(
-            hll_sketch(batch, self.col, self.m, self.group_cols), batch_id, hll_merge
+        self._state.fold(
+            "sketch", hll_sketch(batch, self.col, self.m, self.group_cols), hll_merge, batch_id
         )
 
     def estimate(self) -> DataFrame:
@@ -173,11 +125,4 @@ def hll_stream(
     """Wire a streaming DataFrame into the HLL monitor; returns
     ``(StreamingQuery, HLLMonitor)``."""
     mon = HLLMonitor(spark, state_dir, col, m, group_cols)
-    writer = (
-        stream.writeStream.foreachBatch(mon.update)
-        .outputMode("update")
-        .trigger(availableNow=True)
-    )
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start(), mon
+    return start_sink(stream, mon.update, state_dir, checkpoint_dir), mon

@@ -18,10 +18,9 @@ prefix cannot collide with a real canonical URL, which starts with a
 scheme letter), so a fully replayed batch is a no-op for EVERY row,
 keyed and keyless alike, under foreachBatch's at-least-once contract.
 
-Crash ordering (the dedup_index_stream argument): survivors land
-before keys — a failure between the writes re-admits at most one
-batch's unindexed survivors (duplicate rows, recoverable by
-re-deduping the output) rather than silently dropping documents.
+Survivors and their keys commit together through
+``streaming.committed`` (the shared protocol); the anti-join against
+the committed index makes a replayed batch admit nothing.
 
 At 100 TB the index holds one short string per admitted document; the
 per-batch cost is canonicalization riding the batch scan plus one
@@ -31,19 +30,26 @@ source offsets do.
 
 from __future__ import annotations
 
-import os
-import shutil
-
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from datalakerulegeneration_spark.ops.domains import (
     DEFAULT_DROP_PARAMS,
     with_canonical_url,
 )
+from datalakerulegeneration_spark.streaming.committed import CommittedState, start_sink
 
 _INDEX_SCHEMA = "canon_key string"
 _NOURL_PREFIX = "\x00nourl:"
+
+
+def canon_key(id_col: str) -> Column:
+    """The dedup key: the canonical URL, or a synthetic per-document
+    key for rows without one."""
+    return F.coalesce(
+        F.col("canonical_url"),
+        F.concat(F.lit(_NOURL_PREFIX), F.col(id_col).cast("string")),
+    )
 
 
 class UrlDeduper:
@@ -60,30 +66,18 @@ class UrlDeduper:
         drop_params=DEFAULT_DROP_PARAMS,
     ):
         self.spark = spark
-        self.index_path = os.path.join(state_dir, "canon_index")
-        self.out_path = os.path.join(state_dir, "survivors")
         self.id_col = id_col
         self.url_col = url_col
         self.strip_www = strip_www
         self.drop_params = tuple(drop_params)
-
-    def _index(self) -> DataFrame:
-        if os.path.exists(self.index_path):
-            return self.spark.read.parquet(self.index_path)
-        return self.spark.createDataFrame([], _INDEX_SCHEMA)
+        self._state = CommittedState(spark, state_dir)
 
     # -- foreachBatch hook -------------------------------------------------
 
     def update(self, batch: DataFrame, batch_id: int) -> None:
         d = with_canonical_url(
             batch, self.url_col, "canonical_url", self.strip_www, self.drop_params
-        ).withColumn(
-            "_canon_key",
-            F.coalesce(
-                F.col("canonical_url"),
-                F.concat(F.lit(_NOURL_PREFIX), F.col(self.id_col).cast("string")),
-            ),
-        )
+        ).withColumn("_canon_key", canon_key(self.id_col))
         # within-batch keeper: smallest id per key. NULL-canonical rows
         # carry unique synthetic keys, so no skewed NULL partition —
         # the same property the batch op gets from its filter+union
@@ -99,29 +93,23 @@ class UrlDeduper:
         # — one row per admitted key), so a distinct would shuffle the
         # whole accumulated index every batch for nothing (r9 review)
         surv = kept.join(
-            self._index()
-            .select(F.col("canon_key").alias("_canon_key")),
+            self.index().select(F.col("canon_key").alias("_canon_key")),
             "_canon_key",
             "left_anti",
-        )
-        # stage once, derive both appends from the staged parquet
-        # (consistency + O(batch) per-batch work — dedup_index_stream)
-        staging = os.path.join(os.path.dirname(self.out_path), f".staging_{batch_id}")
-        surv.write.mode("overwrite").parquet(staging)
-        staged = self.spark.read.parquet(staging)
-        staged.drop("_canon_key").write.mode("append").parquet(self.out_path)
-        staged.select(F.col("_canon_key").alias("canon_key")).write.mode(
-            "append"
-        ).parquet(self.index_path)
-        shutil.rmtree(staging, ignore_errors=True)
+        ).drop("_canon_key")
+        # the keys derive from the survivors as written
+        tx = self._state.begin()
+        written = self.spark.read.parquet(*tx.write("survivors", surv))
+        tx.write("canon_index", written.select(canon_key(self.id_col).alias("canon_key")))
+        tx.commit(batch_id)
 
     # -- views -------------------------------------------------------------
 
     def survivors(self) -> DataFrame:
-        return self.spark.read.parquet(self.out_path)
+        return self._state.read("survivors")
 
     def index(self) -> DataFrame:
-        return self._index()
+        return self._state.read("canon_index", _INDEX_SCHEMA)
 
 
 def url_dedup_stream(
@@ -138,11 +126,4 @@ def url_dedup_stream(
     canonical-URL deduper; returns ``(StreamingQuery, UrlDeduper)`` —
     await the query, then read results through the deduper's views."""
     ud = UrlDeduper(spark, state_dir, id_col, url_col, strip_www, drop_params)
-    writer = (
-        stream.writeStream.foreachBatch(ud.update)
-        .outputMode("update")
-        .trigger(availableNow=True)
-    )
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start(), ud
+    return start_sink(stream, ud.update, state_dir, checkpoint_dir), ud

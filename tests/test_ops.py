@@ -2949,11 +2949,11 @@ def test_pq_index_append_frozen_codebooks_idempotent(spark, sf_tables, tmp_path)
     assert codes.where(F.col("cell").isNull()).count() == 0  # routed
     # r9 atomic append: the delta landed in a versioned dir published
     # by the manifest, not an in-place multi-file append
-    assert ann_index._codes_dirs(path) == ["codes", "codes_v1"]
+    assert ann_index._codes_state(spark, path).versions("codes") == ["v1", "v2"]
 
     ann_index.pq_index_append(rest, path)  # replay → no-op
     assert ann_index._read_codes(spark, path).count() == n_all
-    assert ann_index._codes_dirs(path) == ["codes", "codes_v1"]  # no manifest churn
+    assert ann_index._codes_state(spark, path).versions("codes") == ["v1", "v2"]  # no manifest churn
     # codebooks untouched by append
     assert sorted(map(tuple, spark.read.parquet(f"{path}/anchors").collect())) == anchors_before
 
@@ -2988,12 +2988,12 @@ def test_pq_index_append_atomic_to_concurrent_readers(spark, sf_tables, tmp_path
         F.col("vec_id").alias("id"),
         F.expr("transform(slice(embedding, 1, 8), x -> 0)").alias("codes"),
         F.lit(1.0).alias("rn_"),
-    ).write.parquet(f"{path}/codes_v9")
-    assert ann_index._codes_dirs(path) == ["codes"]
+    ).write.parquet(f"{path}/codes/_v9")
+    assert ann_index._codes_state(spark, path).versions("codes") == ["v1"]
     assert ann_index._read_codes(spark, path).count() == n0
     # ...and the next append must NOT reuse the orphan's name
     ann_index.pq_index_append(emb.where((F.col("vec_id") >= 300) & (F.col("vec_id") < 320)), path)
-    assert ann_index._codes_dirs(path) == ["codes", "codes_v10"]
+    assert ann_index._codes_state(spark, path).versions("codes") == ["v1", "v10"]
     assert ann_index._read_codes(spark, path).count() == n0 + 20
 
     # (b) concurrent: poll committed counts while a real append runs
@@ -3029,7 +3029,7 @@ def test_pq_index_compact_preserves_rows_and_search(spark, sf_tables, tmp_path):
     ann_index.pq_build_index(emb.where(F.col("vec_id") < 200), path, m=8, ksub=32)
     ann_index.pq_index_append(emb.where((F.col("vec_id") >= 200) & (F.col("vec_id") < 350)), path)
     ann_index.pq_index_append(emb.where(F.col("vec_id") >= 350), path)
-    assert len(ann_index._codes_dirs(path)) == 3
+    assert len(ann_index._codes_state(spark, path).versions("codes")) == 3
     q = emb.where(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
@@ -3037,15 +3037,15 @@ def test_pq_index_compact_preserves_rows_and_search(spark, sf_tables, tmp_path):
     before_hits = sorted(map(tuple, ann_index.pq_search_index(spark, path, q, k=5).collect()))
 
     ann_index.pq_index_compact(spark, path)
-    dirs = ann_index._codes_dirs(path)
-    assert len(dirs) == 1 and dirs[0].startswith("codes_v")
+    dirs = ann_index._codes_state(spark, path).versions("codes")
+    assert len(dirs) == 1 and dirs[0].startswith("v")
     assert sorted(map(tuple, ann_index._read_codes(spark, path).collect())) == before_rows
     assert sorted(map(tuple, ann_index.pq_search_index(spark, path, q, k=5).collect())) == before_hits
     import os
 
-    assert os.path.exists(f"{path}/codes")  # old dirs left for readers
+    assert os.path.exists(f"{path}/codes")  # the codes dir itself stays
     ann_index.pq_index_compact(spark, path)  # single-dir: no-op
-    assert ann_index._codes_dirs(path) == dirs
+    assert ann_index._codes_state(spark, path).versions("codes") == dirs
 
 
 def test_quality_sweep_monotone_and_agrees_with_funnel(sf_tables, duck):
@@ -3629,17 +3629,17 @@ def test_psi_frozen_refit_trigger(spark):
         psi_frozen(edge, "x", 1.0, 1.0, [1, 1])
 
 
-def test_pq_index_paths_must_be_local():
+def test_pq_index_paths_must_be_local(spark):
     """The codes-manifest commit protocol is POSIX-rename atomic, so a
     URI-scheme index path must refuse loudly instead of silently
     bypassing the manifest (r9 review: os.path checks all miss on
     hdfs://... and the manifest write would crash mid-append)."""
     import pytest as _pytest
 
-    from datalakerulegeneration_spark.ops.ann_index import _codes_dirs
+    from datalakerulegeneration_spark.ops.ann_index import _codes_state
 
     for bad in ("hdfs://ns/idx", "s3a://bucket/idx", "file://host/idx"):
         with _pytest.raises(NotImplementedError, match="local-filesystem"):
-            _codes_dirs(bad)
-    # plain absolute/relative paths pass the guard (legacy fallback)
-    assert _codes_dirs("/nonexistent/idx") == ["codes"]
+            _codes_state(spark, bad)
+    # plain absolute/relative paths pass the guard (nothing committed)
+    assert _codes_state(spark, "/nonexistent/idx").versions("codes") == []

@@ -910,6 +910,31 @@ def test_sketch_monitors_replay_idempotent(spark, tmp_path):
     assert hll.applied_batch_id() == 1
 
 
+def test_sketch_stream_restart_without_checkpoint_counts_once(spark, tmp_path):
+    """A stream restarted without ``checkpoint_dir`` resumes its batch
+    ids (the checkpoint defaults into the state dir), so rows that
+    arrived between the two runs are folded — and folded once — instead
+    of being skipped as an already-applied batch 0."""
+    from datalakerulegeneration_spark.streaming import sketch_stream
+
+    src, state = str(tmp_path / "src"), str(tmp_path / "state")
+
+    def run():
+        stream = spark.readStream.schema("v string").parquet(src)
+        q, mon = sketch_stream(spark, stream, state, "v", depth=2, width=16)
+        q.awaitTermination(120)
+        return mon
+
+    spark.createDataFrame([("a",), ("a",), ("b",)], "v string").write.mode("append").parquet(src)
+    run()
+    spark.createDataFrame([("a",), ("c",)], "v string").write.mode("append").parquet(src)
+    mon = run()
+    est = {r["value"]: r["est"] for r in mon.estimate(
+        spark.createDataFrame([("a",), ("b",), ("c",)], "v string")).collect()}
+    # exact (no collisions at this tiny cardinality): every row once
+    assert est == {"a": 3, "b": 1, "c": 1}
+
+
 def test_embedding_decontaminate_stream_matches_batch(spark, sf_tables, tmp_path):
     """Real availableNow file stream: the stateless scrub's audit
     columns equal the batch audit per id; drop mode keeps exactly the
@@ -1381,96 +1406,228 @@ def test_psi_drift_stream_frozen_reference(spark, sf_tables):
         )
 
 
-def test_curate_indexed_crash_matrix(spark, tmp_path):
-    """r10 (r9 verdict #6): the COMPOSED curate sink — quality gate →
-    URL dedup (index 1) → content dedup (index 2) — crash-injected at
-    every inter-stage commit boundary. The single-sink at-least-once
-    ordering is not enough for a composition (a crash between the two
-    indexes' commits could starve stage 2 on replay and silently DROP
-    documents); the composed sink's per-batch overwrite dirs + atomic
-    marker must replay to output BYTE-IDENTICAL to a run that never
-    crashed, at every boundary."""
-    import shutil as _sh
-
-    from datalakerulegeneration_spark.streaming import CurateIndexedDeduper
-
-    # batch 0: u1 admitted; u1-dup-url dropped (same canonical URL);
-    # c1/c1copy: distinct URLs, same TEXT → content dedup keeps c1;
-    # lowq fails the quality gate (one repeated token)
-    b0 = spark.createDataFrame(
-        [
-            (1, "http://a.com/x?utm_source=t", "alpha beta gamma delta epsilon zeta."),
-            (2, "http://A.com/x", "other words entirely, but the url matches."),
-            (3, "http://b.com/1", "identical content travels here, full stop."),
-            (4, "http://b.com/2", "identical content travels here, full stop."),
-            (5, "http://c.com/low", "!!!! ???? !!!! ???? !!!!"),
-        ],
-        "doc_id long, url string, text string",
-    )
-    # batch 1: url of doc 1 again (drop), text of doc 3 again under a
-    # new url (drop), one genuinely new doc (admit)
-    b1 = spark.createDataFrame(
-        [
-            (6, "http://a.com/x", "reposted under the canonical url again."),
-            (7, "http://d.com/z", "identical content travels here, full stop."),
-            (8, "http://e.com/new", "a genuinely new document arrives now."),
-        ],
-        "doc_id long, url string, text string",
+def _crash_cases(spark, sf_tables, tmp_path):
+    """Per sink: ``(make(root), [batch 0, batch 1], snapshot(sink))``.
+    ``snapshot`` reads every committed view the sink has — survivors,
+    state, index — as sorted plain rows."""
+    from datalakerulegeneration_spark.ops import ann_index
+    from datalakerulegeneration_spark.streaming import (
+        AnnIndexIngester,
+        BudgetAdmitter,
+        CMSketchMonitor,
+        CurateIndexedDeduper,
+        DomainGuard,
+        HLLMonitor,
+        IncrementalDeduper,
+        IncrementalProfiler,
+        NearDupDeduper,
+        UrlDeduper,
     )
 
-    def run(state, crashes):
-        """Drive both batches; at each (batch_idx, failpoint) in
-        ``crashes`` inject a crash then replay the same batch."""
-        dd = CurateIndexedDeduper(spark, str(state), quality_min=0.5)
-        for bid, batch in ((0, b0), (1, b1)):
-            for fp in [f for b, f in crashes if b == bid]:
-                dd.failpoint = fp
-                try:
-                    dd.update(batch, bid)
-                    raise AssertionError(f"failpoint {fp} did not fire")
-                except RuntimeError as e:
-                    assert "injected crash" in str(e)
-                dd.failpoint = None
-            dd.update(batch, bid)  # the replay that must converge
-            dd.update(batch, bid)  # replay of the COMMITTED batch: no-op
-        surv = sorted(map(tuple, dd.survivors().select("doc_id", "url", "text").collect()))
-        urls = sorted(r["canon_key"] for r in dd.url_index().collect())
-        digs = sorted(r["text_digest"] for r in dd.digest_index().collect())
-        return surv, urls, digs
+    def frames(schema, *batches):
+        return [spark.createDataFrame(b, schema) for b in batches]
 
-    ref = run(tmp_path / "ref", crashes=[])
-    # the intended semantics first: docs 1, 3, 8 survive
-    assert [r[0] for r in ref[0]] == [1, 3, 8]
-    # url index carries every url-stage-admitted key (content-dup doc 4
-    # still claims its URL), quality-failed doc 5 claims nothing
-    assert len(ref[1]) == 5  # a.com/x, b.com/1, b.com/2, d.com/z, e.com/new
-    assert len(ref[2]) == 3  # digests of docs 1, 3, 8
+    def rows(df, *cols):
+        return sorted(map(tuple, df.select(*cols).collect()), key=repr)
 
-    points = ("survivors", "digest_index", "url_index")
-    for bid in (0, 1):
-        for fp in points:
-            got = run(tmp_path / f"crash_{bid}_{fp}", crashes=[(bid, fp)])
-            assert got == ref, (bid, fp)
-    # the storm: every boundary of every batch crashes once
-    storm = run(
-        tmp_path / "storm",
-        crashes=[(b, f) for b in (0, 1) for f in points],
-    )
-    assert storm == ref
+    docs = "doc_id long, text string"
+    web = "doc_id long, url string, text string"
+    values = frames("v string", [("a",), ("a",), ("b",)], [("a",), ("c",)])
+    nd = _neardup_corpus()
+
+    def ann(root):
+        # one build, copied per run: only the appends are under test
+        template = tmp_path / "ann_template"
+        if not template.exists():
+            ann_index.pq_build_index(emb.where("vec_id < 64"), str(template), m=8, ksub=8)
+        if not root.exists():
+            shutil.copytree(template, root)
+        return AnnIndexIngester(spark, str(root))
+
+    emb = sf_tables["embeddings"]
+    return {
+        "cm": (
+            lambda r: CMSketchMonitor(spark, str(r), "v", depth=2, width=16),
+            values,
+            lambda s: rows(s.sketch(), "*"),
+        ),
+        "hll": (
+            lambda r: HLLMonitor(spark, str(r), "v", m=16),
+            values,
+            lambda s: rows(s.sketch(), "*"),
+        ),
+        "profiler": (
+            lambda r: IncrementalProfiler(spark, str(r), ["k", "x"]),
+            frames("k long, x double", [(1, 1.0), (2, None)], [(3, 5.0), (4, 2.0)]),
+            lambda s: rows(s.finalize(), "*"),
+        ),
+        "budget": (
+            lambda r: BudgetAdmitter(spark, str(r), 9),
+            frames(
+                docs,
+                [(1, "one two three"), (2, "four five")],
+                [(3, "six seven"), (4, "eight nine ten eleven")],
+            ),
+            lambda s: (rows(s.survivors(), "*"), s.admitted_tokens()),
+        ),
+        "domain_guard": (
+            lambda r: DomainGuard(spark, str(r), 1, blocked_domains=["evil.org"]),
+            frames(
+                web,
+                [(1, "https://a.com/1", "x"), (2, "https://a.com/2", "x"),
+                 (3, "https://evil.org/1", "x"), (4, None, "x")],
+                [(5, "https://a.com/3", "x"), (6, "https://c.com/1", "x"), (7, None, "x")],
+            ),
+            lambda s: (rows(s.survivors(), "*"), rows(s.admitted_counts(), "*")),
+        ),
+        "dedup_index": (
+            lambda r: IncrementalDeduper(spark, str(r)),
+            frames(docs, [(1, "alpha"), (2, "beta"), (3, "alpha")],
+                   [(10, "alpha"), (11, "gamma")]),
+            lambda s: (rows(s.survivors(), "*"), rows(s.index(), "*")),
+        ),
+        "url_dedup": (
+            lambda r: UrlDeduper(spark, str(r)),
+            frames(
+                web,
+                [(1, "http://a.com/x?utm_source=t", "x"), (2, "http://A.com/x", "x"),
+                 (3, None, "x")],
+                [(4, "http://a.com/x", "x"), (5, "http://e.com/new", "x"), (6, None, "x")],
+            ),
+            lambda s: (rows(s.survivors(), "*"), rows(s.index(), "*")),
+        ),
+        "neardup_index": (
+            lambda r: NearDupDeduper(spark, str(r), threshold=0.3, bands=16),
+            frames(docs, [x for x in nd if x[0] < 10], [x for x in nd if x[0] >= 10]),
+            lambda s: (rows(s.survivors(), "*"), rows(s.index(), "*")),
+        ),
+        "ann": (
+            ann,
+            [emb.where(f"vec_id >= {lo} AND vec_id < {lo + 16}") for lo in (64, 80)],
+            lambda s: rows(ann_index._read_codes(spark, s.path), "*"),
+        ),
+        "curate_indexed": (
+            lambda r: CurateIndexedDeduper(spark, str(r), quality_min=0.5),
+            # batch 0: u1 admitted; u1-dup-url dropped (same canonical
+            # URL); c1/c1copy: distinct URLs, same TEXT → content dedup
+            # keeps c1; lowq fails the quality gate (one repeated token).
+            # batch 1: url of doc 1 again (drop), text of doc 3 again
+            # under a new url (drop), one genuinely new doc (admit)
+            frames(
+                web,
+                [
+                    (1, "http://a.com/x?utm_source=t", "alpha beta gamma delta epsilon zeta."),
+                    (2, "http://A.com/x", "other words entirely, but the url matches."),
+                    (3, "http://b.com/1", "identical content travels here, full stop."),
+                    (4, "http://b.com/2", "identical content travels here, full stop."),
+                    (5, "http://c.com/low", "!!!! ???? !!!! ???? !!!!"),
+                ],
+                [
+                    (6, "http://a.com/x", "reposted under the canonical url again."),
+                    (7, "http://d.com/z", "identical content travels here, full stop."),
+                    (8, "http://e.com/new", "a genuinely new document arrives now."),
+                ],
+            ),
+            lambda s: (
+                rows(s.survivors(), "doc_id", "url", "text"),
+                rows(s.url_index(), "canon_key"),
+                rows(s.digest_index(), "text_digest"),
+            ),
+        ),
+    }
+
+
+@pytest.mark.parametrize(
+    "sink",
+    ["cm", "hll", "profiler", "budget", "domain_guard", "dedup_index",
+     "url_dedup", "neardup_index", "ann", "curate_indexed"],
+)
+def test_committed_crash_matrix(spark, sf_tables, tmp_path, monkeypatch, sink):
+    """Every sink commits through streaming.committed, so a crash after
+    ANY output write and before the commit must replay to the views of
+    a run that never crashed: the crashed batch is replayed, then the
+    committed batch is replayed again (a no-op) — zero duplicates, zero
+    losses. Crashes are injected by patching the primitive's write,
+    after every write the sink makes in batch 1 (on top of committed
+    state). The composed curate sink also crashes in batch 0 and takes
+    a storm: every write of every batch crashes once before the batch
+    commits."""
+    from datalakerulegeneration_spark.streaming import committed
+
+    make, batches, snapshot = _crash_cases(spark, sf_tables, tmp_path)[sink]
+    real_write = committed.Transaction.write
+    writes = []
+
+    def recording(self, output, df, replace=False):
+        writes.append(output)
+        return real_write(self, output, df, replace)
+
+    def crashing(target):
+        def write(self, output, df, replace=False):
+            path = real_write(self, output, df, replace)
+            if output == target:
+                raise RuntimeError(f"injected crash after {output}")
+            return path
+
+        return write
+
+    def run(root, crashes, start=0):
+        """Drive the batches from ``start``; at each (batch, output) in
+        ``crashes`` crash after that write, then replay the batch, then
+        replay the committed batch."""
+        s = make(root)
+        for bid, batch in list(enumerate(batches))[start:]:
+            for point in [o for b, o in crashes if b == bid]:
+                with monkeypatch.context() as mp:
+                    mp.setattr(committed.Transaction, "write", crashing(point))
+                    with pytest.raises(RuntimeError, match="injected crash"):
+                        s.update(batch, bid)
+            s.update(batch, bid)  # the replay that must converge
+            s.update(batch, bid)  # replay of the COMMITTED batch: no-op
+        return snapshot(s)
+
+    # the run that never crashes records every write; its state after
+    # batch 0 is the starting point of the batch-1 crash runs
+    points = []
+    ref_sink = make(tmp_path / "ref")
+    for bid, batch in enumerate(batches):
+        with monkeypatch.context() as mp:
+            mp.setattr(committed.Transaction, "write", recording)
+            del writes[:]
+            ref_sink.update(batch, bid)
+            points += [(bid, o) for o in writes]
+        if bid == 0:
+            shutil.copytree(tmp_path / "ref", tmp_path / "after0")
+    ref = snapshot(ref_sink)
+    assert [o for b, o in points if b == 1], "batch 1 wrote nothing"
+
+    if sink == "curate_indexed":
+        # the intended semantics first: docs 1, 3, 8 survive
+        assert [r[0] for r in ref[0]] == [1, 3, 8]
+        # url index carries every url-stage-admitted key (content-dup
+        # doc 4 still claims its URL), quality-failed doc 5 claims none
+        assert len(ref[1]) == 5  # a.com/x, b.com/1, b.com/2, d.com/z, e.com/new
+        assert len(ref[2]) == 3  # digests of docs 1, 3, 8
+        for i, point in enumerate(p for p in points if p[0] == 0):
+            assert run(tmp_path / f"crash0_{i}", [point]) == ref, point
+        assert run(tmp_path / "storm", points) == ref
+    for i, point in enumerate(p for p in points if p[0] == 1):
+        root = tmp_path / f"crash1_{i}"
+        shutil.copytree(tmp_path / "after0", root)
+        assert run(root, [point], start=1) == ref, point
 
 
 def test_curate_indexed_corrupted_state_fails_loudly(spark, tmp_path):
-    """r11 (r10 ADVICE): a batch id listed in the COMMITTED marker
-    whose directory is missing is state corruption — the marker and
-    the dirs live and die together (dirs are written first; an empty
-    batch still writes a directory). Silently skipping it would shrink
-    the url/digest indexes and re-admit duplicates, so the deduper
-    must refuse to read the state instead."""
-    import shutil as _sh
-
+    """r11 (r10 ADVICE): a file the manifest lists that is missing is
+    state corruption — the manifest and the files live and die together
+    (files are written first; an empty batch still writes a file).
+    Silently skipping it would shrink the url/digest indexes and
+    re-admit duplicates, so the deduper must refuse to read the state
+    instead."""
     import pytest as _pt
 
     from datalakerulegeneration_spark.streaming import CurateIndexedDeduper
+    from datalakerulegeneration_spark.streaming.committed import CommittedState
 
     b0 = spark.createDataFrame(
         [(1, "http://a.com/x", "alpha beta gamma delta epsilon zeta.")],
@@ -1479,7 +1636,7 @@ def test_curate_indexed_corrupted_state_fails_loudly(spark, tmp_path):
     dd = CurateIndexedDeduper(spark, str(tmp_path / "st"), quality_min=0.5)
     dd.update(b0, 0)
     assert [r["doc_id"] for r in dd.survivors().collect()] == [1]
-    _sh.rmtree(tmp_path / "st" / "url_index" / "batch=0")
+    os.remove(CommittedState(spark, str(tmp_path / "st")).paths("url_index")[0])
     with _pt.raises(RuntimeError, match="state corrupted"):
         dd.url_index().collect()
     # the other indexes are intact and still readable
