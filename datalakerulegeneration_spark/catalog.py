@@ -10,8 +10,10 @@ and the catalog is itself a DataFrame so discovery composes with joins.
 from __future__ import annotations
 
 import os
+from typing import NamedTuple
 
 import pandas as pd
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -46,6 +48,33 @@ import weakref
 # session (no stale-session hits from recycled id()s, no unbounded
 # growth across session restarts)
 _SF_TABLE_CACHE: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
+
+
+class ScanSize(NamedTuple):
+    files: list[str]
+    bytes: int
+    splits: int  # estimated: each file split at spark.sql.files.maxPartitionBytes
+
+    def rows(self) -> int | None:
+        """Row count from the parquet footers; None for other formats."""
+        try:
+            return sum(pq.ParquetFile(f).metadata.num_rows for f in self.files)
+        except (OSError, ValueError):  # unreadable, or not parquet (ArrowInvalid)
+            return None
+
+
+def scan_size(df: DataFrame) -> ScanSize | None:
+    """Size of ``df``'s input files from metadata only (no data read);
+    None when it reads no files or one cannot be stat'ed locally."""
+    files = [f.removeprefix("file:") for f in df.inputFiles()]
+    try:
+        sizes = [os.path.getsize(f) for f in files]
+    except OSError:
+        return None
+    if not sizes:
+        return None
+    max_pb = df.sparkSession._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    return ScanSize(files, sum(sizes), sum(max(1, -(-n // max_pb)) for n in sizes))
 
 
 def load_sf_tables(spark: SparkSession, sf_dir: str, tables=TESTDATA_TABLES) -> dict[str, DataFrame]:

@@ -74,6 +74,8 @@ import unicodedata
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from datalakerulegeneration_spark.materialize import checkpoint
+
 # HTML5 email regex (reference features/__init__.py:57) — Java/RE2
 # spelling: named group dropped, the last (?:\.(...)) repetition's
 # capture is group 1 in both engines (last-iteration capture).
@@ -406,14 +408,14 @@ def histogram_outlier_cells(
     the Arrow-expansion lineage; the checkpoint truncates it (~15%
     off the pair's wall, interleaved A/B) — lineage fault tolerance is
     moot for the fixed golden fixture."""
-    feats = reference_melt(df, row_id_col).localCheckpoint()
+    feats = checkpoint(reference_melt(df, row_id_col), eager=True)
     fkeys = ["field_id", "feat_id"]
     model1 = _histogram_model(feats, fkeys, peak_s)
     flags1 = _score(feats, model1, fkeys, outlier_s).select(
         "row_id", F.col("field_id").alias("column_id")
     )
 
-    hp = hint_pairs(df, max_buckets, row_id_col, feats=feats).localCheckpoint()
+    hp = checkpoint(hint_pairs(df, max_buckets, row_id_col, feats=feats), eager=True)
     hunits = hp.select(
         "row_id", "af", "ai", "bf", "bi",
         F.concat_ws(
@@ -456,8 +458,8 @@ def parthist_outlier_cells(
     The melted expansion and the joint hint-pair frame are persisted
     for the same reason as :func:`histogram_outlier_cells` — each has
     several lazy consumers that would re-derive the Arrow expansion."""
-    feats = reference_melt(df, row_id_col).localCheckpoint()
-    hp = hint_pairs(df, max_buckets, row_id_col, feats=feats).localCheckpoint()
+    feats = checkpoint(reference_melt(df, row_id_col), eager=True)
+    hp = checkpoint(hint_pairs(df, max_buckets, row_id_col, feats=feats), eager=True)
     keys = ["af", "ai", "bf", "bi", "av", "an"]  # pair + partition key
     hp = hp.withColumn(
         "v", F.concat_ws("\x1f", "bv", F.col("bn").cast("string"))

@@ -40,6 +40,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from datalakerulegeneration_spark.materialize import checkpoint, scope
 from datalakerulegeneration_spark.ops.similarity import (
     cosine_norms_expr,
     norm_expr,
@@ -241,6 +242,7 @@ def pq_search_index(
     return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
 
 
+@scope()
 def pq_index_append(
     vectors: DataFrame,
     path: str,
@@ -296,7 +298,7 @@ def pq_index_append(
     # pin the anti-join result: isEmpty() and the delta encode below
     # would otherwise each re-run the full-index scan + anti-join
     # (r9 review — doubled per-append cost on a large index)
-    fresh = fresh.localCheckpoint(eager=True)
+    fresh = checkpoint(fresh, eager=True)
     if fresh.isEmpty():
         return  # full replay — nothing to publish, no manifest churn
     codes = _encode(fresh, anchors, m, dsub, id_col, vec_col)

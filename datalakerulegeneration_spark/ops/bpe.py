@@ -55,6 +55,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from datalakerulegeneration_spark.materialize import checkpoint, release, scope
+
 MARKER = "</w>"
 
 _MERGES_SCHEMA = "step int, left string, right string, merged string, pair_count bigint"
@@ -89,6 +91,7 @@ def _seq_to_arr_expr() -> str:
     return "split(substring(seq, 2, length(seq) - 2), '  ')"
 
 
+@scope()
 def bpe_learn(
     df: DataFrame,
     id_col: str,
@@ -140,10 +143,8 @@ def bpe_learn(
     if merges_per_scan < 1:
         raise ValueError(f"merges_per_scan must be >= 1, got {merges_per_scan}")
     spark = df.sparkSession
-    state = (
-        _word_freq(df, text_col)
-        .select(_init_seq_col().alias("seq"), "freq")
-        .localCheckpoint()
+    held = state = checkpoint(
+        _word_freq(df, text_col).select(_init_seq_col().alias("seq"), "freq"), eager=True
     )
     merges: list[tuple[int, str, str, str, int]] = []
     scans = 0
@@ -188,7 +189,9 @@ def bpe_learn(
                 "seq", F.replace(F.col("seq"), F.lit(f" {l}  {r} "), F.lit(f" {l}{r} "))
             )
         if scans % checkpoint_every == 0:
-            state = state.localCheckpoint()
+            state = checkpoint(state, eager=True)
+            release(held)
+            held = state
     return spark.createDataFrame(merges, _MERGES_SCHEMA)
 
 

@@ -32,6 +32,7 @@ from typing import Literal
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from datalakerulegeneration_spark.materialize import checkpoint, persist
 from datalakerulegeneration_spark.ops import packing, sampling, textqa
 
 
@@ -182,7 +183,7 @@ def curate_corpus(
             # checkpoint job below; eager per-stage checkpoints were
             # measured SLOWER (serialized jobs, and DataFrame
             # localCheckpoint materializes through the non-AQE plan)
-            cleaned = cleaned.persist()
+            cleaned = persist(cleaned)
         # r12: the language gate is a row-local expression, so filter
         # the (unique-id) cleaned frame directly — identical rows to
         # the previous inner join against language_id's (id) frame,
@@ -191,7 +192,7 @@ def curate_corpus(
             "_lang", textqa.language_pred_col("cleaned_text")
         ).where(F.col("_lang") == ccnet_lang).select("id", "cleaned_text")
         if ccnet_materialize:
-            ckept = ckept.persist()
+            ckept = persist(ckept)
         cids = (
             textqa.ccnet_buckets(
                 ckept, "id", "cleaned_text", materialize_scores=ccnet_materialize
@@ -211,7 +212,7 @@ def curate_corpus(
             # recomputable boundary for dynamic-allocation clusters:
             # rows cached, lineage kept (slower re-analysis per branch
             # is the documented trade)
-            docs = docs.persist()
+            docs = persist(docs)
         elif ccnet_materialize:
             # the ONE lineage cut: the rebuilt corpus feeds the whole
             # downstream chain (d0 / eval / total and their stages) —
@@ -222,7 +223,7 @@ def curate_corpus(
             # as overlapping stages of this checkpoint's job. r13:
             # eager=False — the builder stays lazy (ADVICE r12), the
             # checkpoint materializes once at the first action.
-            docs = docs.localCheckpoint(eager=False)
+            docs = checkpoint(docs)
     if near_dup_threshold is not None:
         from datalakerulegeneration_spark.ops import dedup
 
@@ -306,7 +307,7 @@ def curate_corpus(
             d4, "id", "n_tokens", "quality", token_budget
         ).select("id", "grp", "n_tokens")
     if materialize_manifest:
-        d4 = d4.persist()
+        d4 = persist(d4)
     if sft_max_tokens is not None:
         # grp rides carry_cols — no join-back re-deriving the chain
         return packing.length_bucket_batches(
@@ -574,13 +575,12 @@ def curation_funnel_ccnet(
     stages still ride the one-scan flag funnel, shifted by the three
     CCNet stages."""
     ld = textqa.common_line_dedup(docs, id_col, text_col)
-    cleaned = ld.where(F.col("n_kept") > 0).select("id", "cleaned_text").persist()
+    cleaned = persist(ld.where(F.col("n_kept") > 0).select("id", "cleaned_text"))
     # r12: row-local language gate as a filter — see curate_corpus
-    ckept = (
+    ckept = persist(
         cleaned.withColumn("_lang", textqa.language_pred_col("cleaned_text"))
         .where(F.col("_lang") == ccnet_lang)
         .select("id", "cleaned_text")
-        .persist()
     )
     cids = (
         textqa.ccnet_buckets(ckept, "id", "cleaned_text", materialize_scores=True)
@@ -592,14 +592,13 @@ def curation_funnel_ccnet(
     # re-analyzing the explode+LM+quantile subtree per branch; the
     # persisted intermediates above materialize as overlapping stages
     # of this one checkpoint job (see curate_corpus's note)
-    rebuilt = (
+    # lazy (r13): materializes at the first stage-row action and is
+    # shared by the ppl row + the tail funnel's branches
+    rebuilt = checkpoint(
         docs.select(F.col(id_col), F.col(group_col))
         .join(ckept.withColumnRenamed("id", id_col), id_col)
         .join(cids.withColumnRenamed("id", id_col), id_col)
         .withColumnRenamed("cleaned_text", text_col)
-        # lazy (r13): materializes at the first stage-row action and is
-        # shared by the ppl row + the tail funnel's branches
-        .localCheckpoint(eager=False)
     )
 
     def stage_row(idx: int, name: str, frame: DataFrame, tcol: str) -> DataFrame:

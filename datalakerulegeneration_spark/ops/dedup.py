@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from datalakerulegeneration_spark.materialize import checkpoint, persist, release
+
 N_HASHES = 16
 N_BANDS = 4  # 4 rows per band
 
@@ -464,9 +466,8 @@ def minhash_dedup(
     (digest, shingle) grain — the same bound as the distinct exchange
     the consumers each re-instantiated; at cluster scale the cache
     spills to disk via MEMORY_AND_DISK, strictly cheaper than three
-    extra exchanges of the same rows. The cache lives for the frame's
-    lifetime (callers that clear session caches between queries, e.g.
-    the bench, release it; the materialization itself is per-run).
+    extra exchanges of the same rows. The cache belongs to the caller's
+    ``materialize.scope()``.
 
     Scale shape of the collapse itself: the groupBy(digest) shuffle
     carries each DISTINCT body once (map-side partial agg collapses
@@ -488,7 +489,7 @@ def minhash_dedup(
     )
     index = base.select("dg", "id")
     distinct_docs = base.groupBy("dg").agg(F.min("txt").alias("txt"))
-    sh = shingles(distinct_docs, "dg", "txt", n).persist()
+    sh = persist(shingles(distinct_docs, "dg", "txt", n))
     sigs = minhash_signatures(sh, k)
     dcands = lsh_candidate_pairs(sigs, k, bands)
     # verified digest-grain near-dup pairs (id_a/id_b are digests here)
@@ -992,11 +993,12 @@ def dup_components(pairs: DataFrame, max_iter: int = 50) -> DataFrame:
     ``max_iter`` rounds raises instead of silently emitting a
     partially-merged result.
     """
-    sym = pairs.select(
-        F.col("id_a").alias("src"), F.col("id_b").alias("dst")
-    ).union(
-        pairs.select(F.col("id_b"), F.col("id_a"))
-    ).distinct().localCheckpoint()  # edges are re-joined every round:
+    sym = checkpoint(
+        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
+        .union(pairs.select(F.col("id_b"), F.col("id_a")))
+        .distinct(),
+        eager=True,
+    )  # edges are re-joined every round:
     # materialize once or the upstream pair pipeline re-runs per iteration
     # r13: labels are SEEDED with min(id, min(neighbors)) — exactly the
     # result of one neighbor-propagation round over identity labels,
@@ -1006,10 +1008,10 @@ def dup_components(pairs: DataFrame, max_iter: int = 50) -> DataFrame:
     # (the seed is a reachable vertex ≤ id); star-shaped near-dup
     # graphs then converge one round earlier (measured 3 → 2 rounds on
     # both flagship graphs at sf0.1, hash-identical labels).
-    labels = (
+    labels = checkpoint(
         sym.groupBy("src").agg(F.least(F.col("src"), F.min("dst")).alias("label"))
         .select(F.col("src").alias("id"), "label")
-    ).localCheckpoint(eager=False)
+    )
     converged = False
     for _ in range(max_iter):
         # r12 optimization: the neighbor-label and pointer-jump message
@@ -1032,9 +1034,8 @@ def dup_components(pairs: DataFrame, max_iter: int = 50) -> DataFrame:
             .groupBy("mid")
             .agg(F.min("mlabel").alias("msg_label"))
         )
-        new_labels = (
-            labels.join(msg_min, labels.id == msg_min.mid, "left")
-            .select(
+        new_labels = checkpoint(
+            labels.join(msg_min, labels.id == msg_min.mid, "left").select(
                 "id",
                 F.col("label").alias("old"),
                 F.least(
@@ -1042,7 +1043,7 @@ def dup_components(pairs: DataFrame, max_iter: int = 50) -> DataFrame:
                     F.coalesce(F.col("msg_label"), F.col("label")),
                 ).alias("label"),
             )
-        ).localCheckpoint(eager=False)
+        )
         # r13: the checkpoint is LAZY and the convergence probe is the
         # materializing action — one job per round instead of two (the
         # eager checkpoint job + a separate probe job). The full count
@@ -1050,7 +1051,8 @@ def dup_components(pairs: DataFrame, max_iter: int = 50) -> DataFrame:
         # completes in this same job; the probe reads the 'old' column
         # carried inside the frame, no join against the previous round.
         changed = new_labels.where("label <> old").count()
-        labels = new_labels.select("id", "label")
+        release(labels)
+        labels = new_labels
         if changed == 0:
             converged = True
             break
@@ -1059,6 +1061,8 @@ def dup_components(pairs: DataFrame, max_iter: int = 50) -> DataFrame:
             f"dup_components did not converge within max_iter={max_iter} rounds; "
             "a component's diameter exceeds the bound — raise max_iter"
         )
+    # the last round's checkpoint holds the whole result
+    release(sym)
     return labels.select(F.col("id"), F.col("label").alias("component"))
 
 
@@ -1227,26 +1231,32 @@ def greedy_over_edges(vertices: DataFrame, edges: DataFrame, max_iter: int = 50)
     ascending dependency chain (near-dup graphs are shallow); raises
     after ``max_iter`` rather than returning a partial answer.
     """
-    e = (
+    e = checkpoint(
         edges.select(
             F.least(F.col("src"), F.col("dst")).alias("src"),
             F.greatest(F.col("src"), F.col("dst")).alias("dst"),
         )
         .where(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint()
+        .distinct(),
+        eager=True,
     )
     # status: null = unresolved, true = kept, false = dropped
-    st = vertices.select(F.col("v")).distinct().withColumn(
-        "kept", F.lit(None).cast("boolean")
-    ).localCheckpoint(eager=False)
+    st = checkpoint(
+        vertices.select(F.col("v")).distinct().withColumn("kept", F.lit(None).cast("boolean"))
+    )
+    prev = None
     for _ in range(max_iter):
         # r13: per-round checkpoints are LAZY and this full-count probe
         # is the materializing action — one job per round instead of an
         # eager checkpoint job plus a probe job (the full count, not
         # limit(1), runs every partition so the checkpoint completes
         # inside this job).
-        if st.where(F.col("kept").isNull()).count() == 0:
+        unresolved = st.where(F.col("kept").isNull()).count()
+        if prev is not None:
+            release(prev)
+        if unresolved == 0:
+            # the last round's checkpoint holds the whole result
+            release(e)
             return st
         src_st = st.select(F.col("v").alias("src"), F.col("kept").alias("src_kept"))
         incoming = (
@@ -1257,9 +1267,9 @@ def greedy_over_edges(vertices: DataFrame, edges: DataFrame, max_iter: int = 50)
                 F.max(F.col("src_kept").isNull()).alias("any_unresolved_src"),
             )
         )
-        st = (
-            st.join(incoming, "v", "left")
-            .select(
+        prev = st
+        st = checkpoint(
+            st.join(incoming, "v", "left").select(
                 "v",
                 F.when(F.col("kept").isNotNull(), F.col("kept"))
                 .when(F.coalesce(F.col("any_kept_src"), F.lit(False)), F.lit(False))
@@ -1269,7 +1279,7 @@ def greedy_over_edges(vertices: DataFrame, edges: DataFrame, max_iter: int = 50)
                 .otherwise(F.lit(None).cast("boolean"))
                 .alias("kept"),
             )
-        ).localCheckpoint(eager=False)
+        )
     raise RuntimeError(
         f"greedy_over_edges did not converge within max_iter={max_iter} rounds; "
         "an ascending dependency chain exceeds the bound — raise max_iter"
@@ -1314,7 +1324,7 @@ def minhash_greedy_keepset(
     distinct_docs = base.where(F.col("txt").isNotNull()).groupBy("dg").agg(
         F.min("txt").alias("txt")
     )
-    sh = shingles(distinct_docs, "dg", "txt", n).persist()
+    sh = persist(shingles(distinct_docs, "dg", "txt", n))
     sigs = minhash_signatures(sh, k)
     dcands = lsh_candidate_pairs(sigs, k, bands)
     dpairs = jaccard_pairs(sh, dcands).where(F.col("jaccard") >= threshold)

@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from datalakerulegeneration_spark.materialize import persist, scope
+
 _EPS = 1e-6  # floor for empty-bin shares (standard PSI guard)
 
 
@@ -508,14 +510,10 @@ def _bucketed_grain(
     wide tables). Columns empty on either side are SKIPPED (a drift
     monitor must keep reporting the healthy columns when one breaks),
     so the returned kept-list may be shorter than ``cols``.
-
-    Caller MUST unpersist the returned grain frame after its final
-    action.
     """
-    jb = (
+    jb = persist(
         _distinct_grain_table(baseline, current, cols)
         .withColumn("pid", _table_pid(_table_buckets(baseline, cols, n_parts)))
-        .persist()
     )
     stats = {
         (r["col_name"], r["pid"]): (r["b"], r["c"], r["mn"])
@@ -545,7 +543,7 @@ def _bucketed_grain(
         " nb double, nc double, nxt_min double",
     )
     grain = jb.join(F.broadcast(offs), ["col_name", "pid"])
-    return jb, grain, kept, nb, nc
+    return grain, kept, nb, nc
 
 
 def _table_pid(bounds: dict[str, list[float]]):
@@ -558,6 +556,7 @@ def _table_pid(bounds: dict[str, list[float]]):
     return pid
 
 
+@scope()
 def ks_table(
     baseline: DataFrame, current: DataFrame, cols: list[str], n_parts: int = 32
 ) -> DataFrame:
@@ -572,26 +571,23 @@ def ks_table(
     returning (the driver boundary the profiler already uses)."""
     from pyspark.sql import Window
 
-    jb, grain, kept, nb, nc = _bucketed_grain(baseline, current, cols, n_parts)
-    try:
-        w = Window.partitionBy("col_name", "pid").orderBy("v").rowsBetween(
-            Window.unboundedPreceding, Window.currentRow
-        )
-        d = F.abs(
-            (F.sum("base_n").over(w) + F.col("off_b")).cast("double") / F.col("nb")
-            - (F.sum("cur_n").over(w) + F.col("off_c")).cast("double") / F.col("nc")
-        )
-        rows = (
-            grain.select("col_name", d.alias("d"))
-            .groupBy("col_name")
-            .agg(F.round(F.max("d"), 6).alias("ks"))
-            .collect()
-        )
-    finally:
-        jb.unpersist()
+    grain, kept, nb, nc = _bucketed_grain(baseline, current, cols, n_parts)
+    w = Window.partitionBy("col_name", "pid").orderBy("v").rowsBetween(
+        Window.unboundedPreceding, Window.currentRow
+    )
+    d = F.abs(
+        (F.sum("base_n").over(w) + F.col("off_b")).cast("double") / F.col("nb")
+        - (F.sum("cur_n").over(w) + F.col("off_c")).cast("double") / F.col("nc")
+    )
+    rows = (
+        grain.select("col_name", d.alias("d"))
+        .groupBy("col_name")
+        .agg(F.round(F.max("d"), 6).alias("ks"))
+        .collect()
+    )
     ks = {r["col_name"]: r["ks"] for r in rows}
     out = [(c, ks[c], nb[c], nc[c]) for c in kept if c in ks]
-    return jb.sparkSession.createDataFrame(
+    return baseline.sparkSession.createDataFrame(
         out, "col_name string, ks double, n_base long, n_cur long"
     )
 
@@ -606,6 +602,7 @@ def ks_table_sql(base_sql: str, cur_sql: str, cols: list[str]) -> str:
     return "\nUNION ALL\n".join(parts)
 
 
+@scope()
 def wasserstein_table(
     baseline: DataFrame, current: DataFrame, cols: list[str], n_parts: int = 32
 ) -> DataFrame:
@@ -617,41 +614,38 @@ def wasserstein_table(
     grain cache can be released."""
     from pyspark.sql import Window
 
-    jb, grain, kept, nb, nc = _bucketed_grain(baseline, current, cols, n_parts)
-    try:
-        wc = Window.partitionBy("col_name", "pid").orderBy("v").rowsBetween(
-            Window.unboundedPreceding, Window.currentRow
-        )
-        wl = Window.partitionBy("col_name", "pid").orderBy("v")
-        terms = (
-            grain.withColumn("ca", F.sum("base_n").over(wc) + F.col("off_b"))
-            .withColumn("cb", F.sum("cur_n").over(wc) + F.col("off_c"))
-            .withColumn("nxt", F.coalesce(F.lead("v").over(wl), F.col("nxt_min")))
-            .where(F.col("nxt").isNotNull())
-            .select(
-                "col_name",
-                F.round(
-                    F.abs(
-                        F.col("ca").cast("double") / F.col("nb")
-                        - F.col("cb").cast("double") / F.col("nc")
-                    )
-                    * (F.col("nxt") - F.col("v")),
-                    6,
+    grain, kept, nb, nc = _bucketed_grain(baseline, current, cols, n_parts)
+    wc = Window.partitionBy("col_name", "pid").orderBy("v").rowsBetween(
+        Window.unboundedPreceding, Window.currentRow
+    )
+    wl = Window.partitionBy("col_name", "pid").orderBy("v")
+    terms = (
+        grain.withColumn("ca", F.sum("base_n").over(wc) + F.col("off_b"))
+        .withColumn("cb", F.sum("cur_n").over(wc) + F.col("off_c"))
+        .withColumn("nxt", F.coalesce(F.lead("v").over(wl), F.col("nxt_min")))
+        .where(F.col("nxt").isNotNull())
+        .select(
+            "col_name",
+            F.round(
+                F.abs(
+                    F.col("ca").cast("double") / F.col("nb")
+                    - F.col("cb").cast("double") / F.col("nc")
                 )
-                .cast("decimal(18,6)")
-                .alias("term"),
+                * (F.col("nxt") - F.col("v")),
+                6,
             )
+            .cast("decimal(18,6)")
+            .alias("term"),
         )
-        rows = (
-            terms.groupBy("col_name")
-            .agg(F.sum("term").cast("double").alias("w1"))
-            .collect()
-        )
-    finally:
-        jb.unpersist()
+    )
+    rows = (
+        terms.groupBy("col_name")
+        .agg(F.sum("term").cast("double").alias("w1"))
+        .collect()
+    )
     w1 = {r["col_name"]: r["w1"] for r in rows}
     out = [(c, w1[c], nb[c], nc[c]) for c in kept if c in w1]
-    return jb.sparkSession.createDataFrame(
+    return baseline.sparkSession.createDataFrame(
         out, "col_name string, w1 double, n_base long, n_cur long"
     )
 

@@ -21,6 +21,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from datalakerulegeneration_spark.catalog import scan_size
+
 # Contract for a multimodal asset table: payload + typed metadata.
 ASSET_SCHEMA = T.StructType(
     [
@@ -61,27 +63,9 @@ def _spread_decode_rows(df: DataFrame) -> DataFrame:
     decode. On a real cluster the scan yields >= cores splits and this
     is a no-op — the same gate `profiling.ensure_parallelism` uses."""
     target = df.sparkSession.sparkContext.defaultParallelism
-    files = df.inputFiles()
-    if not files or len(files) >= target:
+    size = scan_size(df)
+    if size is None or size.splits >= target:
         return df
-    import os
-
-    conf = df.sparkSession.conf.get(
-        "spark.sql.files.maxPartitionBytes", "134217728"
-    ).lower()
-    units = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30}
-    num = conf.rstrip("kmgb")
-    mult = units.get(conf.removesuffix("b")[-1:], 1)
-    max_pb = int(num) * mult if num.isdigit() else 134217728
-    est = 0
-    for f in files:
-        try:
-            sz = os.path.getsize(f.removeprefix("file:"))
-        except OSError:
-            return df
-        est += max(1, -(-sz // max_pb))
-        if est >= target:
-            return df
     return df.repartition(target)
 
 

@@ -33,6 +33,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from datalakerulegeneration_spark.materialize import persist
+
 
 def exact_quantiles(df: DataFrame, col: str, qs: list[float]) -> DataFrame:
     """Exact R-7 (linear-interpolation) quantiles of ``col`` at each
@@ -53,10 +55,8 @@ def exact_quantiles(df: DataFrame, col: str, qs: list[float]) -> DataFrame:
     # materialization = one partitioner = consistent _pid everywhere;
     # the cached state is the distinct-value grain, the same bound as
     # the shuffle itself.
-    d = (
-        g.repartitionByRange(n_parts, F.asc("_v"))
-        .withColumn("_pid", F.spark_partition_id())
-        .persist()
+    d = persist(
+        g.repartitionByRange(n_parts, F.asc("_v")).withColumn("_pid", F.spark_partition_id())
     )
     wl = (
         Window.partitionBy("_pid")

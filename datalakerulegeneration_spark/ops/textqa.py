@@ -12,6 +12,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from datalakerulegeneration_spark.materialize import persist
+
 # Tiny deterministic stopword marker sets per language — heuristic
 # language ID (the reference has no lang-id; this is the pipeline
 # extension). Marker words chosen to be disjoint across languages.
@@ -1924,7 +1926,7 @@ def ccnet_buckets(
         # superlinear decade in the composed ccnet flagship); the
         # registered standalone query keeps the lazy default so its
         # audited plan is unchanged
-        lp = lp.persist()
+        lp = persist(lp)
     qs = [i / n_buckets for i in range(1, n_buckets)]
     # r12: the n_buckets−1 thresholds are collapsed to ONE array row
     # and the bucket becomes a map-side count of cleared thresholds —

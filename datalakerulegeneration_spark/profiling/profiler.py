@@ -27,12 +27,12 @@ to ``approx_count_distinct`` and quantiles to ``percentile_approx``
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, Row, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from datalakerulegeneration_spark.catalog import ScanSize, scan_size
+from datalakerulegeneration_spark.materialize import persist, scope
 from datalakerulegeneration_spark.profiling import stats as S
 from datalakerulegeneration_spark.profiling.patterns import (
     TYPE_THRESHOLD,
@@ -81,7 +81,7 @@ _PROFILE_BYTES_PER_TASK = 256 << 10
 _PROFILE_ROWS_PER_TASK = 25_000
 
 
-def ensure_parallelism(df: DataFrame) -> DataFrame:
+def ensure_parallelism(df: DataFrame, size: ScanSize | None) -> DataFrame:
     """Spread expression-heavy work across all cores.
 
     A small parquet file scans as 1-2 partitions, serializing the
@@ -89,36 +89,19 @@ def ensure_parallelism(df: DataFrame) -> DataFrame:
     cluster the scan already yields many splits and this is a no-op;
     locally the one-off round-robin shuffle is far cheaper than the
     lost parallelism (measured 14s → 2s on 600k-row lineitem).
+
+    ``size`` is :func:`catalog.scan_size` of ``df``: metadata only
+    (avoids df.rdd, which instantiates the RDD lineage on every profile
+    call — r02 verdict). Few files alone does NOT imply few scan
+    partitions: the scan splits big files at maxPartitionBytes, and
+    forcing a repartition of a 4×1 GB table would shuffle 4 GB for
+    nothing — so only an input whose estimated split count is below
+    the parallelism is widened. Inputs that cannot be stat'ed (None,
+    e.g. non-local URIs) are left to the scan's own splitting.
     """
     target = df.sparkSession.sparkContext.defaultParallelism
-    # inputFiles() is a metadata-only call (avoids df.rdd, which
-    # instantiates the RDD lineage on every profile call — r02
-    # verdict). Few files alone does NOT imply few scan partitions:
-    # the scan splits big files at maxPartitionBytes, and forcing a
-    # repartition of a 4×1 GB table would shuffle 4 GB for nothing —
-    # so estimate the split count from local file sizes and only
-    # shuffle when the scan genuinely under-parallelizes (the small
-    # local-bench files this fix targets). Non-local URIs stat-fail
-    # and are left to the scan's own splitting.
-    files = df.inputFiles()
-    if not files or len(files) >= target:
+    if size is None or size.splits >= target:
         return df
-    conf = df.sparkSession.conf.get("spark.sql.files.maxPartitionBytes", "134217728").lower()
-    units = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30}
-    num = conf.rstrip("kmgb")
-    mult = units.get(conf.removesuffix("b")[-1:], 1)
-    max_pb = int(num) * mult if num.isdigit() else 134217728
-    est = 0
-    total_sz = 0
-    for f in files:
-        try:
-            sz = os.path.getsize(f.removeprefix("file:"))
-        except OSError:
-            return df
-        total_sz += sz
-        est += max(1, -(-sz // max_pb))
-        if est >= target:
-            return df
     # r12: repartition to a WORK-PROPORTIONAL width, not a blanket
     # defaultParallelism — ~256 KiB of compressed input per task keeps
     # the expression work parallel for big tables (600k-row lineitem:
@@ -128,21 +111,13 @@ def ensure_parallelism(df: DataFrame) -> DataFrame:
     # per stage for 25-row inputs). At cluster scale real scans yield
     # >= target splits and never reach this branch, so the constant
     # sizes local/elastic small-table work only.
-    width = min(target, max(1, -(-total_sz // _PROFILE_BYTES_PER_TASK)))
-    if width < target:
+    width = min(target, max(1, -(-size.bytes // _PROFILE_BYTES_PER_TASK)))
+    rows = size.rows() if width < target else None
+    if rows is not None:
         # dense-encoding floor: bytes say "small" but many rows still
         # mean much expression work per task (see _PROFILE_ROWS_PER_TASK)
-        try:
-            import pyarrow.parquet as pq
-
-            rows = sum(
-                pq.ParquetFile(f.removeprefix("file:")).metadata.num_rows
-                for f in files
-            )
-            width = min(target, max(width, -(-rows // _PROFILE_ROWS_PER_TASK)))
-        except Exception:  # noqa: BLE001 — non-parquet input, missing pyarrow
-            pass
-    if width <= est:
+        width = min(target, max(width, -(-rows // _PROFILE_ROWS_PER_TASK)))
+    if width <= size.splits:
         return df
     return df.repartition(width)
 
@@ -158,7 +133,6 @@ def scalar_stats_long(
     exact: bool = True,
     coerce_numeric: bool = False,
     max_cols_per_pass: int = 200,
-    persists: list | None = None,
 ) -> DataFrame:
     """All registry stats for all columns as ``(table, col_name,
     stat_name, stat_value)``.
@@ -204,7 +178,6 @@ def scalar_stats_long(
                 exact=exact,
                 coerce_numeric=coerce_numeric,
                 max_cols_per_pass=max_cols_per_pass,
-                persists=persists,
             )
             for i in range(0, len(cols), max_cols_per_pass)
         ]
@@ -213,18 +186,17 @@ def scalar_stats_long(
             out = out.unionByName(p)
         return out
     kinds = _profile_kinds(df, coerce_numeric)
-    spark = df.sparkSession
-    df = ensure_parallelism(df)
+    size = scan_size(df)
+    df = ensure_parallelism(df, size)
     wide_long = _wide_stats_long(df, table, cols, kinds, exact)
     if not exact:
         return wide_long
     keys = [(table, c, kinds[c]) for c in cols]
     mn, ms = _kind_melts(df, cols, kinds, base_k=0)
-    sz = _est_input_bytes(df)
     return wide_long.unionByName(
         _exact_distinct_long(
-            spark, mn, ms, keys, persists=persists,
-            small=sz is not None and sz < _SMALL_PROFILE_BYTES,
+            mn, ms, keys,
+            small=size is not None and size.bytes < _SMALL_PROFILE_BYTES,
         )
     )
 
@@ -367,25 +339,10 @@ def _ck_decode(df, keys):
 _SMALL_PROFILE_BYTES = 4 << 20
 
 
-def _est_input_bytes(df: DataFrame) -> int | None:
-    files = df.inputFiles()
-    if not files:
-        return None
-    tot = 0
-    for f in files:
-        try:
-            tot += os.path.getsize(f.removeprefix("file:"))
-        except OSError:
-            return None
-    return tot
-
-
 def _exact_distinct_long(
-    spark,
     melted_num,
     melted_str,
     keys,
-    persists: list | None = None,
     small: bool = False,
 ) -> DataFrame:
     """Distinct counts + exact quartiles from kind-split melts
@@ -451,17 +408,11 @@ def _exact_distinct_long(
                 "nnum", F.sum("cntn").over(Window.partitionBy("_ck"))
             )
         else:
-            n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-            d_ = (
+            n_parts = int(vc.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
+            d_ = persist(
                 vc.repartitionByRange(n_parts, F.asc("_ck"), F.asc_nulls_first("v"))
                 .withColumn("_pid", F.spark_partition_id())
-                .persist()
             )
-            # r13 (ADVICE r12): the grain cache must not outlive the
-            # profiling collect — callers that collect pass a list and
-            # unpersist after (lazy consumers keep the old lifetime)
-            if persists is not None:
-                persists.append(d_)
             wl = (
                 Window.partitionBy("_ck", "_pid")
                 .orderBy(F.asc_nulls_first("v"))
@@ -522,32 +473,25 @@ def _exact_distinct_long(
                 ),
             )
         g = _ck_decode(g, keys)
-        # g is consumed by TWO stack branches (NUMERIC + COERCED);
-        # persist the #columns-row result so the whole melt/window
-        # chain below it runs once, not per branch (r13 — in the
-        # small-input path there is no d_ cache to stop the
-        # re-derivation). Registered for release after the collect.
-        g = g.persist()
-        if persists is not None:
-            persists.append(g)
-        branches.append(
-            g.where(F.col("_ckind") == S.NUMERIC).selectExpr(
-                "table",
-                "col_name",
-                "stack(5, 'distinct_num', dn,"
-                " 'unique_ratio', dn / nullif(rn, 0.0),"
-                " 'q1', q1, 'q2', q2, 'q3', q3)"
-                " as (stat_name, stat_value)",
+        # one stack branch per key kind present (NUMERIC / COERCED);
+        # when both consume g, persist the #columns-row result so the
+        # whole melt/window chain below it runs once, not per branch
+        # (r13 — in the small-input path there is no d_ cache to stop
+        # the re-derivation)
+        stacks = {
+            S.NUMERIC: "stack(5, 'distinct_num', dn, 'unique_ratio', dn / nullif(rn, 0.0),"
+            " 'q1', q1, 'q2', q2, 'q3', q3)",
+            S.COERCED: "stack(3, 'q1', q1, 'q2', q2, 'q3', q3)",
+        }
+        present = [k for k in stacks if k in {kind for _, _, kind in keys}]
+        if len(present) == 2:
+            g = persist(g)
+        for kind in present:
+            branches.append(
+                g.where(F.col("_ckind") == kind).selectExpr(
+                    "table", "col_name", f"{stacks[kind]} as (stat_name, stat_value)"
+                )
             )
-        )
-        branches.append(
-            g.where(F.col("_ckind") == S.COERCED).selectExpr(
-                "table",
-                "col_name",
-                "stack(3, 'q1', q1, 'q2', q2, 'q3', q3)"
-                " as (stat_name, stat_value)",
-            )
-        )
     if melted_str is not None:
         sg = (
             melted_str.groupBy("_ck", "s")
@@ -595,7 +539,7 @@ def approx_sketch_stats_long(
     :func:`scalar_stats_long` above; keep the two in sync."""
     cols = columns or df.columns
     kinds = {f.name: column_kind(f.dataType) for f in df.schema.fields}
-    df = ensure_parallelism(df)
+    df = ensure_parallelism(df, scan_size(df))
     quartile_p = {"q1": 1, "q2": 2, "q3": 3}
     aggs = []
     parts = []
@@ -659,7 +603,7 @@ def value_stats(df: DataFrame, table: str, columns: list[str] | None = None) -> 
     we fix a total order).
     """
     cols = columns or df.columns
-    df = ensure_parallelism(df)
+    df = ensure_parallelism(df, scan_size(df))
     return _value_stats_core(
         _melt_k(df, cols, base_k=0), [(table, c) for c in cols]
     )
@@ -828,7 +772,8 @@ def token_stats(df: DataFrame, table: str, columns: list[str] | None = None) -> 
             " top_keywords map<string,double>, table string",
         )
     return _token_stats_core(
-        _melt_k(ensure_parallelism(df), cols, base_k=0), [(table, c) for c in cols]
+        _melt_k(ensure_parallelism(df, scan_size(df)), cols, base_k=0),
+        [(table, c) for c in cols],
     )
 
 
@@ -904,43 +849,16 @@ def profile_table(
 
     Collects the (tiny, #columns-sized) per-pass results and assembles
     a ``profiles`` DataFrame with ``unique_id = table::column``
-    (reference profiler.py:303).
+    (reference profiler.py:303) — :func:`profile_tables` over one table.
     """
-    from concurrent.futures import ThreadPoolExecutor
-
-    # The three passes are independent jobs over the same table — submit
-    # them concurrently (Spark's scheduler interleaves their stages;
-    # wall time ≈ the slowest pass, not the sum).
-    transient: list = []
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        f_scalar = pool.submit(
-            lambda: scalar_stats_long(
-                df, table, exact=exact, coerce_numeric=coerce_numeric,
-                persists=transient,
-            ).collect()
-        )
-        f_value = pool.submit(lambda: value_stats(df, table).collect()) if with_values else None
-        f_token = pool.submit(lambda: token_stats(df, table).collect()) if with_tokens else None
-        scalar = {
-            (r["col_name"], r["stat_name"]): r["stat_value"] for r in f_scalar.result()
-        }
-        vrows = {r["col_name"]: r.asDict() for r in f_value.result()} if f_value else {}
-        trows = {r["col_name"]: r.asDict() for r in f_token.result()} if f_token else {}
-    # the quartile grain cache served exactly this collect — release it
-    # (ADVICE r12: the leaked InMemoryRelation grew with every call)
-    for p in transient:
-        p.unpersist()
-
-    out_rows = _assemble_profile_rows(df, table, scalar, vrows, trows)
-    # ONE slice at creation: createDataFrame defaults to
-    # defaultParallelism slices, and a #columns-row frame split 32 ways
-    # turns every downstream crossJoin into p×q near-empty tasks
-    # (measured 12s of task-launch overhead for a 5×4-column match) and
-    # every groupBy into 100+ tasks after unions. (A coalesce(1) after
-    # the fact is WORSE: its single task replays all 32 Python-worker
-    # partition round-trips serially, ~4s per frame.)
-    rdd = spark.sparkContext.parallelize(out_rows, 1)
-    return spark.createDataFrame(rdd, schema=PROFILE_SCHEMA)
+    return profile_tables(
+        spark,
+        {table: df},
+        exact=exact,
+        with_tokens=with_tokens,
+        with_values=with_values,
+        coerce_numeric=coerce_numeric,
+    )
 
 
 def _assemble_profile_rows(df, table, scalar, vrows, trows) -> list:
@@ -1118,7 +1036,6 @@ def profile_tables(
     # each run ONCE for the whole table set instead of once per table.
     # Values identical: every key gains the table column, so groups are
     # the same disjoint (table, col) sets the per-table chains computed.
-    spark0 = tables[names[0]].sparkSession
     chunk_n = 200  # scalar_stats_long's max_cols_per_pass default
     wide_parts, mn_parts, ms_parts, vmelts, tmelts = [], [], [], [], []
     dist_keys, v_keys, t_keys = [], [], []
@@ -1127,12 +1044,12 @@ def profile_tables(
     all_small = True
     for n in names:
         df0 = tables[n]
-        sz = _est_input_bytes(df0)
-        if sz is None or sz >= _SMALL_PROFILE_BYTES:
+        size = scan_size(df0)
+        if size is None or size.bytes >= _SMALL_PROFILE_BYTES:
             all_small = False
         kinds = _profile_kinds(df0, coerce_numeric)
         cols = df0.columns
-        df0 = ensure_parallelism(df0)
+        df0 = ensure_parallelism(df0, size)
         for i in range(0, len(cols), chunk_n):
             chunk = cols[i : i + chunk_n]
             wide_parts.append(_wide_stats_long(df0, n, chunk, kinds, exact))
@@ -1156,17 +1073,16 @@ def profile_tables(
                 tmelts.append(_melt_k(df0, scols, base_k=len(t_keys)))
                 t_keys.extend((n, c) for c in scols)
     scalar_u = union_all(wide_parts)
-    transient: list = []
-    if exact and (mn_parts or ms_parts):
-        scalar_u = scalar_u.unionByName(
-            _exact_distinct_long(
-                spark0, union_all(mn_parts), union_all(ms_parts), dist_keys,
-                persists=transient, small=all_small,
-            )
-        )
     value_u = _value_stats_core(union_all(vmelts), v_keys) if vmelts else None
     token_u = _token_stats_core(union_all(tmelts), t_keys) if tmelts else None
-    with ThreadPoolExecutor(max_workers=3) as pool:
+    with scope(), ThreadPoolExecutor(max_workers=3) as pool:
+        if exact and (mn_parts or ms_parts):
+            scalar_u = scalar_u.unionByName(
+                _exact_distinct_long(
+                    union_all(mn_parts), union_all(ms_parts), dist_keys,
+                    small=all_small,
+                )
+            )
         f_scalar = pool.submit(scalar_u.collect)
         f_value = pool.submit(value_u.collect) if value_u is not None else None
         f_token = pool.submit(token_u.collect) if token_u is not None else None
@@ -1181,15 +1097,19 @@ def profile_tables(
         if f_token is not None:
             for r in f_token.result():
                 trows[r["table"]][r["col_name"]] = r.asDict()
-    for p in transient:
-        p.unpersist()
 
     out_rows = []
     for n in names:
         out_rows.extend(
             _assemble_profile_rows(tables[n], n, scalar[n], vrows[n], trows[n])
         )
-    # one slice, same rationale as profile_table
+    # ONE slice at creation: createDataFrame defaults to
+    # defaultParallelism slices, and a #columns-row frame split 32 ways
+    # turns every downstream crossJoin into p×q near-empty tasks
+    # (measured 12s of task-launch overhead for a 5×4-column match) and
+    # every groupBy into 100+ tasks after unions. (A coalesce(1) after
+    # the fact is WORSE: its single task replays all 32 Python-worker
+    # partition round-trips serially, ~4s per frame.)
     rdd = spark.sparkContext.parallelize(out_rows, 1)
     return spark.createDataFrame(rdd, schema=PROFILE_SCHEMA)
 

@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from datalakerulegeneration_spark.materialize import scope
 from datalakerulegeneration_spark.ops import packing
 from datalakerulegeneration_spark.streaming.committed import CommittedState, start_sink
 
@@ -60,6 +61,7 @@ class BudgetAdmitter:
 
     # -- foreachBatch hook -------------------------------------------------
 
+    @scope()
     def update(self, batch: DataFrame, batch_id: int) -> None:
         if self._state.applied(batch_id):
             return
@@ -89,7 +91,7 @@ class BudgetAdmitter:
                 F.col("offset") + F.col("weight") <= F.lit(remaining)
             ).select(F.col("id").alias(self.id_col), *carry, "weight")
             # the token total derives from the survivors as written
-            written = self.spark.read.parquet(*tx.write("survivors", adm))
+            written = tx.write("survivors", adm)
             admitted_w = written.agg(
                 F.coalesce(F.sum("weight"), F.lit(0)).cast("bigint")
             ).first()[0]

@@ -31,6 +31,7 @@ import os
 import re
 import shutil
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 
 MANIFEST = "_MANIFEST"
@@ -116,27 +117,34 @@ class Transaction:
         self.state = state
         self._staged: dict[str, tuple[str, list[str], bool]] = {}
 
-    def write(self, output: str, df: DataFrame, replace: bool = False) -> list[str]:
-        """Write ``df`` as a new version of ``output`` and return its
-        files. On commit it joins the committed versions, or with
-        ``replace`` becomes the only one."""
+    def write(self, output: str, df: DataFrame, replace: bool = False) -> DataFrame:
+        """Write ``df`` as a new version of ``output`` and return what
+        was written, read back. On commit it joins the committed
+        versions, or with ``replace`` becomes the only one. An append
+        of zero rows stages nothing, so a replay adds no empty version."""
         d = os.path.join(self.state.root, output)
         n = 1 + max([0] + [int(m.group(1)) for m in map(_VERSIONED.match, _ls(d)) if m])
         stage = os.path.join(d, f"_v{n}")
         df.write.parquet(stage)
-        files = []
-        for name in sorted(_ls(stage)):
-            if name.startswith("part-"):
-                files.append(f"v{n}-{name}")
-                os.rename(os.path.join(stage, name), os.path.join(d, files[-1]))
+        parts = [p for p in sorted(_ls(stage)) if p.startswith("part-")]
+        if not replace and not sum(
+            pq.ParquetFile(os.path.join(stage, p)).metadata.num_rows for p in parts
+        ):
+            shutil.rmtree(stage)
+            return self.state.spark.createDataFrame([], df.schema)
+        files = [f"v{n}-{p}" for p in parts]
+        for p, f in zip(parts, files):
+            os.rename(os.path.join(stage, p), os.path.join(d, f))
         shutil.rmtree(stage)
         self._staged[output] = (f"v{n}", files, replace)
-        return [os.path.join(d, f) for f in files]
+        return self.state.spark.read.schema(df.schema).parquet(*[os.path.join(d, f) for f in files])
 
     def commit(self, batch_id: int | None = None) -> None:
         """Publish the staged versions (and ``batch_id``) in one rename."""
         root = self.state.root
         m = self.state.manifest()
+        if not self._staged and batch_id in (None, m["batch_id"]):
+            return
         for output, (v, files, replace) in self._staged.items():
             kept = {} if replace else m["outputs"].get(output, {})
             m["outputs"][output] = {**kept, v: files}

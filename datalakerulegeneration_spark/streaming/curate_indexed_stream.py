@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
+from datalakerulegeneration_spark.materialize import scope
 from datalakerulegeneration_spark.ops.domains import (
     DEFAULT_DROP_PARAMS,
     with_canonical_url,
@@ -60,7 +61,6 @@ class CurateIndexedDeduper:
         strip_www: bool = True,
         drop_params=DEFAULT_DROP_PARAMS,
     ):
-        self.spark = spark
         self.state_dir = state_dir
         self.id_col = id_col
         self.url_col = url_col
@@ -72,6 +72,7 @@ class CurateIndexedDeduper:
 
     # -- foreachBatch hook -------------------------------------------------
 
+    @scope()
     def update(self, batch: DataFrame, batch_id: int) -> None:
         if self._state.applied(batch_id):
             return
@@ -111,9 +112,7 @@ class CurateIndexedDeduper:
             "left_anti",
         )
         tx = self._state.begin()
-        written = self.spark.read.parquet(
-            *tx.write("survivors", s2.drop("_canon_key", "_digest"))
-        )
+        written = tx.write("survivors", s2.drop("_canon_key", "_digest"))
         tx.write(
             "digest_index",
             written.select(F.md5(F.col(self.text_col)).alias("text_digest")),

@@ -26,6 +26,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from datalakerulegeneration_spark.materialize import scope
 from datalakerulegeneration_spark.ops.dedup import incremental_dedup_against_index
 from datalakerulegeneration_spark.streaming.committed import CommittedState, start_sink
 
@@ -42,13 +43,13 @@ class IncrementalDeduper:
         id_col: str = "doc_id",
         text_col: str = "text",
     ):
-        self.spark = spark
         self.id_col = id_col
         self.text_col = text_col
         self._state = CommittedState(spark, state_dir)
 
     # -- foreachBatch hook -------------------------------------------------
 
+    @scope()
     def update(self, batch: DataFrame, batch_id: int) -> None:
         surv = incremental_dedup_against_index(
             batch, self.index(), self.id_col, self.text_col
@@ -56,7 +57,7 @@ class IncrementalDeduper:
         # the digests derive from the survivors as written: per-batch
         # work stays O(batch), and the two outputs cannot disagree
         tx = self._state.begin()
-        written = self.spark.read.parquet(*tx.write("survivors", surv))
+        written = tx.write("survivors", surv)
         tx.write("digest_index", written.select("text_digest"))
         tx.commit(batch_id)
 

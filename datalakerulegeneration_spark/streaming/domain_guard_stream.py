@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from datalakerulegeneration_spark.materialize import scope
 from datalakerulegeneration_spark.ops.domains import (
     blocklist_filter,
     with_registered_domain,
@@ -53,7 +54,6 @@ class DomainGuard:
     ):
         if max_per_domain < 1:
             raise ValueError(f"max_per_domain must be >= 1, got {max_per_domain}")
-        self.spark = spark
         self.state_dir = state_dir
         self.max_per_domain = int(max_per_domain)
         self.blocked = sorted(set(blocked_domains))
@@ -69,6 +69,7 @@ class DomainGuard:
 
     # -- foreachBatch hook -------------------------------------------------
 
+    @scope()
     def update(self, batch: DataFrame, batch_id: int) -> None:
         if self._state.applied(batch_id):
             return
@@ -93,9 +94,7 @@ class DomainGuard:
         )
         # the per-domain totals derive from the survivors as written
         tx = self._state.begin()
-        written = self.spark.read.parquet(
-            *tx.write("survivors", adm.select(*batch.columns, "_dom"))
-        )
+        written = tx.write("survivors", adm.select(*batch.columns, "_dom"))
         batch_counts = written.groupBy(F.col("_dom").alias("domain")).agg(
             F.count(F.lit(1)).cast("bigint").alias("_n_new")
         )

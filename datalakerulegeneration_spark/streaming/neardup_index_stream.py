@@ -44,6 +44,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from datalakerulegeneration_spark.materialize import scope
 from datalakerulegeneration_spark.ops.dedup import (
     N_BANDS,
     N_HASHES,
@@ -76,7 +77,6 @@ class NearDupDeduper:
         k: int = N_HASHES,
         bands: int = N_BANDS,
     ):
-        self.spark = spark
         self._state = CommittedState(spark, state_dir)
         # every committed band version sits in this dir (the manifest
         # lives one level up), so it reads as one parquet dataset
@@ -97,6 +97,7 @@ class NearDupDeduper:
 
     # -- foreachBatch hook -------------------------------------------------
 
+    @scope()
     def update(self, batch: DataFrame, batch_id: int) -> None:
         idc, txc = self.id_col, self.text_col
         base = batch.select(
@@ -188,7 +189,7 @@ class NearDupDeduper:
         # 5. bands recompute deterministically from the survivors as
         #    written
         tx = self._state.begin()
-        written = self.spark.read.parquet(*tx.write("survivors", admitted))
+        written = tx.write("survivors", admitted)
         tx.write(_INDEX, self._doc_bands(written))
         tx.commit(batch_id)
 

@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from datalakerulegeneration_spark.materialize import scope
 from datalakerulegeneration_spark.profiling.profiler import column_kind
 from datalakerulegeneration_spark.profiling import stats as S
 from datalakerulegeneration_spark.streaming.committed import CommittedState, start_sink
@@ -128,6 +129,7 @@ class IncrementalProfiler:
 
     # -- foreachBatch hook -------------------------------------------------
 
+    @scope()
     def update(self, batch: DataFrame, batch_id: int) -> None:
         self._state.fold(
             "state", _partial_stats(batch, self.columns), merge_partials, batch_id

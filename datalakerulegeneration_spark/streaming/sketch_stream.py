@@ -19,6 +19,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from datalakerulegeneration_spark.materialize import scope
 from datalakerulegeneration_spark.ops.hll import hll_estimate, hll_merge, hll_sketch
 from datalakerulegeneration_spark.ops.sketch import cm_estimate, cm_merge, cm_sketch
 from datalakerulegeneration_spark.streaming.committed import CommittedState, start_sink
@@ -57,6 +58,7 @@ class CMSketchMonitor(_MergeMonitor):
         self.depth = depth
         self.width = width
 
+    @scope()
     def update(self, batch: DataFrame, batch_id: int) -> None:
         self._state.fold(
             "sketch", cm_sketch(batch, self.col, self.depth, self.width), cm_merge, batch_id
@@ -103,6 +105,7 @@ class HLLMonitor(_MergeMonitor):
         self.m = m
         self.group_cols = list(group_cols or [])
 
+    @scope()
     def update(self, batch: DataFrame, batch_id: int) -> None:
         self._state.fold(
             "sketch", hll_sketch(batch, self.col, self.m, self.group_cols), hll_merge, batch_id

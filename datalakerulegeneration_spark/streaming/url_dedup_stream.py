@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from datalakerulegeneration_spark.materialize import scope
 from datalakerulegeneration_spark.ops.domains import (
     DEFAULT_DROP_PARAMS,
     with_canonical_url,
@@ -65,7 +66,6 @@ class UrlDeduper:
         strip_www: bool = True,
         drop_params=DEFAULT_DROP_PARAMS,
     ):
-        self.spark = spark
         self.id_col = id_col
         self.url_col = url_col
         self.strip_www = strip_www
@@ -74,6 +74,7 @@ class UrlDeduper:
 
     # -- foreachBatch hook -------------------------------------------------
 
+    @scope()
     def update(self, batch: DataFrame, batch_id: int) -> None:
         d = with_canonical_url(
             batch, self.url_col, "canonical_url", self.strip_www, self.drop_params
@@ -99,7 +100,7 @@ class UrlDeduper:
         ).drop("_canon_key")
         # the keys derive from the survivors as written
         tx = self._state.begin()
-        written = self.spark.read.parquet(*tx.write("survivors", surv))
+        written = tx.write("survivors", surv)
         tx.write("canon_index", written.select(canon_key(self.id_col).alias("canon_key")))
         tx.commit(batch_id)
 

@@ -194,3 +194,27 @@ def test_wide_table_chunked_profile(spark):
         return plan._jdf.queryExecution().analyzed().toString().count("Union")
     assert unions(200) == unions(0)  # 12 cols <= 200: no split happened
     assert unions(5) > unions(0)     # 3 chunks: extra union arms
+
+
+@pytest.mark.parametrize("setting, max_pb", [("1t", 1 << 40), ("64kb", 64 << 10), ("100000", 100000)])
+def test_scan_size_reads_max_partition_bytes_as_spark_does(spark, sf_tables, setting, max_pb):
+    """The split estimate takes spark.sql.files.maxPartitionBytes from
+    Spark's typed conf: every byte-string spelling Spark accepts."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from datalakerulegeneration_spark.catalog import scan_size
+
+    df = sf_tables["lineitem"]
+    path = df.inputFiles()[0].removeprefix("file:")
+    old = spark.conf.get("spark.sql.files.maxPartitionBytes")
+    spark.conf.set("spark.sql.files.maxPartitionBytes", setting)
+    try:
+        size = scan_size(df)
+    finally:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", old)
+    nbytes = os.path.getsize(path)
+    assert (size.bytes, size.splits) == (nbytes, -(-nbytes // max_pb))
+    assert size.rows() == pq.ParquetFile(path).metadata.num_rows
+    assert scan_size(spark.createDataFrame([(1,)], "x int")) is None

@@ -1698,3 +1698,28 @@ def test_curate_indexed_stream_wiring(spark, tmp_path):
     # history re-arrives as batch 0, which the marker skips — no-op
     dd = run(state, str(tmp_path / "ck_fresh"))
     assert sorted(r["doc_id"] for r in dd.survivors().collect()) == [1, 3, 5]
+
+
+def test_index_sink_replays_stage_no_new_versions(spark, tmp_path):
+    """A replayed batch admits nothing, so it adds no (empty) version to
+    any output and leaves the manifest file itself untouched (the
+    near-dup sink's replay is checked in test_materialize)."""
+    from datalakerulegeneration_spark.streaming import IncrementalDeduper, UrlDeduper
+    from datalakerulegeneration_spark.streaming.committed import MANIFEST, CommittedState
+
+    cases = {
+        "dedup_index": (IncrementalDeduper, "doc_id long, text string",
+                        [(1, "alpha"), (2, "beta"), (3, "alpha")], "digest_index"),
+        "url_dedup": (UrlDeduper, "doc_id long, url string, text string",
+                      [(1, "http://a.com/x", "x"), (2, None, "y")], "canon_index"),
+    }
+    for name, (make, schema, rows, index) in cases.items():
+        root = str(tmp_path / name)
+        sink, batch = make(spark, root), spark.createDataFrame(rows, schema)
+        sink.update(batch, 0)
+        inode = os.stat(os.path.join(root, MANIFEST)).st_ino
+        for _ in range(2):
+            sink.update(batch, 0)
+        state = CommittedState(spark, root)
+        assert [state.versions(o) for o in ("survivors", index)] == [["v1"], ["v1"]], name
+        assert os.stat(os.path.join(root, MANIFEST)).st_ino == inode, name

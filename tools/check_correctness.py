@@ -4,6 +4,9 @@ Runs every ``__spark_entry__.queries()`` entry at the given sf dir, runs
 the matching ``oracle_sql()`` in DuckDB over the same parquet, and
 compares row count, sorted column names, and exact sorted values.
 
+Also the registry-wide leak gate: each query runs inside
+``materialize.scope()``; anything cached after it closes is a LEAK.
+
 Usage: python tools/check_correctness.py [--sf /root/testdata/sf0.01] [names...]
 """
 
@@ -20,6 +23,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb
 
 import __spark_entry__ as entrymod
+from datalakerulegeneration_spark.materialize import footprint, scope
 from datalakerulegeneration_spark.session import get_spark
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
@@ -63,18 +67,27 @@ def main() -> int:
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
     names = args.names or list(qs)
-    failures = 0
+    failures = leaks = 0
     for name in names:
         t0 = time.time()
+        before = footprint(spark)
         try:
-            df = qs[name](spark, args.sf)
-            cols = sorted(df.columns)
-            rows = [tuple(norm(r[c]) for c in cols) for r in df.collect()]
+            with scope():
+                df = qs[name](spark, args.sf)
+                cols = sorted(df.columns)
+                rows = [tuple(norm(r[c]) for c in cols) for r in df.collect()]
             rows.sort(key=lambda t: tuple((x is None, str(type(x)), x) for x in t))
         except Exception as e:
             print(f"FAIL  {name}: spark error: {e}")
             failures += 1
             continue
+        after = footprint(spark)
+        if after != before:
+            print(
+                f"LEAK  {name}: {len(after[0] - before[0])} persisted RDD(s), "
+                f"{after[1] - before[1]} CacheManager entr(y/ies) left"
+            )
+            leaks += 1
         if name not in oracles:
             print(f"OK*   {name}: rows={len(rows)} (no oracle, rows-only) [{time.time()-t0:.1f}s]")
             continue
@@ -110,7 +123,8 @@ def main() -> int:
         else:
             print(f"OK    {name}: rows={len(rows)} [{time.time()-t0:.1f}s]")
     print(f"\n{len(names) - failures}/{len(names)} queries match")
-    return 1 if failures else 0
+    print(f"leak sweep: {leaks} quer(y/ies) left a cached relation behind")
+    return 1 if failures or leaks else 0
 
 
 if __name__ == "__main__":

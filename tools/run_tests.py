@@ -78,6 +78,9 @@ GROUPS: dict[str, list[str]] = {
         # r11 rebalance: the heavy published-profile parity module
         # (many-table profiling, ~190 s) moved here from mm's rider
         "tests/test_published_artifacts.py",
+        # the materialization leak tests + the 22-query registry sweep
+        # (~3 min) ride the lightest group
+        "tests/test_materialize.py",
     ],
     "rest": [
         "tests/test_dboost_golden.py",
